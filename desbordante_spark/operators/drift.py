@@ -27,6 +27,17 @@ from pyspark.sql import functions as F
 __all__ = ["histogram_sketch", "drift_metrics", "quantile_drift"]
 
 
+def _hist_bucket(v: F.Column, spec: float | str) -> F.Column:
+    """The one histogram bucket rule: ``'discrete'`` → the value itself,
+    a width → fixed-width ``floor(v / width)``; both as strings. Shared by
+    ``histogram_sketch``, the mergeable histogram state
+    (``profile_state.hist_state_init``) and the streaming sketch, so every
+    path buckets a value identically."""
+    if spec == "discrete":
+        return v.cast("string")
+    return F.floor(v / F.lit(float(spec))).cast("string")
+
+
 def histogram_sketch(
     df: DataFrame,
     value_col: str,
@@ -39,10 +50,8 @@ def histogram_sketch(
     dropped (they carry no position in the distribution)."""
     v = F.col(value_col)
     base = df.filter(v.isNotNull())
-    if discrete:
-        bucket = v.cast("string")
-    elif bucket_width is not None:
-        bucket = F.floor(v / F.lit(bucket_width)).cast("string")
+    if discrete or bucket_width is not None:
+        bucket = _hist_bucket(v, "discrete" if discrete else bucket_width)
     else:
         bins = bins or 20
         mm = base.agg(F.min(v).alias("lo"), F.max(v).alias("hi")).collect()[0]

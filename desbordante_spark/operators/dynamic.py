@@ -26,7 +26,11 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from desbordante_spark.model import as_cols
+from desbordante_spark.model import as_cols, VERDICT_COLS
+from desbordante_spark.operators.fd import (
+    _fd_verdict, _lhs_clusters, _rhs_counts,
+)
+from desbordante_spark.operators.ucc import _ucc_verdict
 
 __all__ = [
     "fd_state_init",
@@ -44,9 +48,7 @@ __all__ = [
 
 def fd_state_init(df: DataFrame, lhs: Sequence[str], rhs: Sequence[str]) -> DataFrame:
     """Initial FD state: ``(lhs..., rhs..., cnt)`` level-1 counts."""
-    lhs = as_cols(lhs)
-    rhs = as_cols(rhs)
-    return df.groupBy(*lhs, *rhs).agg(F.count(F.lit(1)).alias("cnt"))
+    return _rhs_counts(df, as_cols(lhs), as_cols(rhs))
 
 
 def ucc_state_init(df: DataFrame, columns: Sequence[str]) -> DataFrame:
@@ -92,82 +94,62 @@ def fd_metrics_from_state(
     error_threshold: float = 0.0,
     by: Sequence[str] = (),
 ) -> DataFrame:
-    """FD verdict from the count state — same g1 rollup as
-    ``fd_metrics_df`` (level-2 aggregation over the state)."""
-    lhs = as_cols(lhs)
-    by = as_cols(by) if by else []
-    by = list(by)
-    lvl2 = state.groupBy(*by, *lhs).agg(
-        F.sum("cnt").alias("cluster_size"),
-        F.count(F.lit(1)).alias("num_distinct_rhs"),
-        F.sum(F.col("cnt") * (F.col("cnt") - 1)).alias("eq_pairs2x"),
-    )
-    viol = F.col("num_distinct_rhs") > 1
-    agg = lvl2.groupBy(*by).agg(
-        F.coalesce(F.sum("cluster_size"), F.lit(0)).cast("long").alias("total_rows"),
-        F.coalesce(F.sum(F.when(viol, 1).otherwise(0)), F.lit(0))
-        .cast("long").alias("num_violating_clusters"),
-        F.coalesce(
-            F.sum(F.when(viol, F.col("cluster_size")).otherwise(0)), F.lit(0)
-        ).cast("long").alias("num_violating_rows"),
-        F.coalesce(
-            F.sum(F.col("cluster_size") * (F.col("cluster_size") - 1)
-                  - F.col("eq_pairs2x")),
-            F.lit(0),
-        ).cast("long").alias("conflicts"),
-    )
-    n = F.col("total_rows")
-    err = F.when(
-        n > 1, F.col("conflicts").cast("double") / (n * n - n).cast("double")
-    ).otherwise(F.lit(0.0))
-    holds = (
-        (F.col("error") <= F.lit(error_threshold))
-        if error_threshold > 0
-        else (F.col("num_violating_clusters") == 0)
-    )
-    return (
-        agg.withColumn("error", err)
-        .withColumn("holds", holds.cast("int"))
-        .select(*by, "total_rows", "num_violating_clusters",
-                "num_violating_rows", "error", "holds")
-    )
+    """FD verdict from the count state — the state IS ``fd_metrics_df``'s
+    level-1 table, so this is the same level-2 + g1 fold over it."""
+    by = as_cols(by)
+    clusters = _lhs_clusters(state, by + as_cols(lhs))
+    return _fd_verdict(clusters, by, error_threshold).select(*by, *VERDICT_COLS)
 
 
-def _fd_lvl2(state: DataFrame, lhs: list) -> DataFrame:
-    """Per-LHS-cluster stats from the count state."""
-    return state.groupBy(*lhs).agg(
-        F.sum("cnt").alias("cluster_size"),
-        F.count(F.lit(1)).alias("num_distinct_rhs"),
-        F.sum(F.col("cnt") * (F.col("cnt") - 1)).alias("eq_pairs2x"),
-    )
+_TOTALS = ("total_rows", "num_violating_clusters", "num_violating_rows",
+           "conflicts")
 
 
-def _fd_contrib(lvl2: DataFrame) -> dict[str, int]:
-    """Fold per-cluster stats into the four verdict scalars (exact longs)."""
-    viol = F.col("num_distinct_rhs") > 1
-    row = lvl2.agg(
-        F.coalesce(F.sum("cluster_size"), F.lit(0)).alias("total_rows"),
-        F.coalesce(F.sum(F.when(viol, 1).otherwise(0)), F.lit(0))
-        .alias("num_violating_clusters"),
-        F.coalesce(F.sum(F.when(viol, F.col("cluster_size")).otherwise(0)),
-                   F.lit(0)).alias("num_violating_rows"),
-        F.coalesce(
-            F.sum(F.col("cluster_size") * (F.col("cluster_size") - 1)
-                  - F.col("eq_pairs2x")),
-            F.lit(0),
-        ).alias("conflicts"),
-    ).collect()[0]
-    return {k: int(row[k]) for k in (
-        "total_rows", "num_violating_clusters", "num_violating_rows",
-        "conflicts",
-    )}
+def _collect_totals(verdict: DataFrame) -> dict[str, int]:
+    """The carried verdict scalars: the fold's global row, collected."""
+    row = verdict.select(*_TOTALS).collect()[0]
+    return {k: int(row[k]) for k in _TOTALS}
 
 
 def fd_totals_from_state(state: DataFrame, lhs: Sequence[str]) -> dict[str, int]:
     """One-off fold of the FULL state into the carried verdict scalars —
     paid once at state init; every snapshot delta after that adjusts these
     totals from touched clusters only (``fd_apply_incremental``)."""
-    return _fd_contrib(_fd_lvl2(state, list(as_cols(lhs))))
+    clusters = _lhs_clusters(state, as_cols(lhs))
+    return _collect_totals(_fd_verdict(clusters, [], 0.0))
+
+
+def _apply_touched(state, keys, key_cols, totals, inserts, deletes, contrib):
+    """Apply a CRUD delta to a count state, re-folding ONLY the clusters
+    (``keys`` values) the delta touches: ``contrib`` folds a state slice
+    into verdict scalars, and untouched clusters' contributions carry over
+    inside ``totals``. Returns ``(new_state, new_totals)``."""
+    deltas = [d for d in (inserts, deletes) if d is not None]
+    if not deltas:
+        return state, dict(totals)
+    touched = deltas[0].select(*keys)
+    for d in deltas[1:]:
+        touched = touched.unionByName(d.select(*keys))
+    touched = touched.distinct()
+    # ONE pass over the state per delta: the touched slice is delta-sized —
+    # pin it eagerly so the old-contribution fold, the re-aggregation, and
+    # the new-contribution fold all run off the materialized slice instead
+    # of re-scanning the state three times
+    old_touched = state.join(
+        F.broadcast(touched), keys, "left_semi"
+    ).localCheckpoint(eager=True)
+    old_contrib = contrib(old_touched)
+    new_touched = state_apply(
+        old_touched, key_cols, inserts, deletes
+    ).localCheckpoint(eager=True)
+    new_contrib = contrib(new_touched)
+    new_totals = {
+        k: totals[k] - old_contrib[k] + new_contrib[k] for k in totals
+    }
+    new_state = state.join(F.broadcast(touched), keys, "left_anti").unionByName(
+        new_touched
+    )
+    return new_state, new_totals
 
 
 def fd_apply_incremental(
@@ -190,53 +172,16 @@ def fd_apply_incremental(
     with full recompute is exact — the per-cluster stats are integer
     sufficient statistics, so subtract-old-add-new is lossless
     (bit-for-bit gate in tests/test_round6.py)."""
-    lhs = list(as_cols(lhs))
-    rhs = list(as_cols(rhs))
-    key_cols = [*lhs, *rhs]
-    deltas = [d for d in (inserts, deletes) if d is not None]
-    if not deltas:
-        return state, dict(totals)
-    touched = deltas[0].select(*lhs)
-    for d in deltas[1:]:
-        touched = touched.unionByName(d.select(*lhs))
-    touched = touched.distinct()
-    # ONE pass over the state per delta: the touched slice is delta-sized —
-    # pin it eagerly so the old-contribution fold, the re-aggregation, and
-    # the new-contribution fold all run off the materialized slice instead
-    # of re-scanning the state three times
-    old_touched = state.join(
-        F.broadcast(touched), lhs, "left_semi"
-    ).localCheckpoint(eager=True)
-    old_contrib = _fd_contrib(_fd_lvl2(old_touched, lhs))
-    new_touched = state_apply(
-        old_touched, key_cols, inserts, deletes
-    ).localCheckpoint(eager=True)
-    new_contrib = _fd_contrib(_fd_lvl2(new_touched, lhs))
-    new_totals = {
-        k: totals[k] - old_contrib[k] + new_contrib[k] for k in totals
-    }
-    new_state = state.join(F.broadcast(touched), lhs, "left_anti").unionByName(
-        new_touched
+    lhs = as_cols(lhs)
+    return _apply_touched(
+        state, lhs, [*lhs, *as_cols(rhs)], totals, inserts, deletes,
+        lambda s: fd_totals_from_state(s, lhs),
     )
-    return new_state, new_totals
 
 
 def ucc_totals_from_state(state: DataFrame) -> dict[str, int]:
     """Fold the UCC key-count state into carried verdict scalars."""
-    viol = F.col("cnt") > 1
-    row = state.agg(
-        F.coalesce(F.sum("cnt"), F.lit(0)).alias("total_rows"),
-        F.coalesce(F.sum(F.when(viol, 1).otherwise(0)), F.lit(0))
-        .alias("num_violating_clusters"),
-        F.coalesce(F.sum(F.when(viol, F.col("cnt")).otherwise(0)), F.lit(0))
-        .alias("num_violating_rows"),
-        F.coalesce(F.sum(F.col("cnt") * (F.col("cnt") - 1)), F.lit(0))
-        .alias("conflicts"),
-    ).collect()[0]
-    return {k: int(row[k]) for k in (
-        "total_rows", "num_violating_clusters", "num_violating_rows",
-        "conflicts",
-    )}
+    return _collect_totals(_ucc_verdict(state, [], 0.0))
 
 
 def ucc_apply_incremental(
@@ -248,43 +193,23 @@ def ucc_apply_incremental(
 ) -> tuple[DataFrame, dict[str, int]]:
     """Snapshot-delta incremental UCC verify — the uniqueness analog of
     ``fd_apply_incremental`` (touched keys only; totals carried)."""
-    columns = list(as_cols(columns))
-    deltas = [d for d in (inserts, deletes) if d is not None]
-    if not deltas:
-        return state, dict(totals)
-    touched = deltas[0].select(*columns)
-    for d in deltas[1:]:
-        touched = touched.unionByName(d.select(*columns))
-    touched = touched.distinct()
-    # one state pass per delta (see fd_apply_incremental)
-    old_touched = state.join(
-        F.broadcast(touched), columns, "left_semi"
-    ).localCheckpoint(eager=True)
-    old_contrib = ucc_totals_from_state(old_touched)
-    new_touched = state_apply(
-        old_touched, columns, inserts, deletes
-    ).localCheckpoint(eager=True)
-    new_contrib = ucc_totals_from_state(new_touched)
-    new_totals = {
-        k: totals[k] - old_contrib[k] + new_contrib[k] for k in totals
-    }
-    new_state = state.join(
-        F.broadcast(touched), columns, "left_anti"
-    ).unionByName(new_touched)
-    return new_state, new_totals
+    columns = as_cols(columns)
+    return _apply_touched(
+        state, columns, columns, totals, inserts, deletes,
+        ucc_totals_from_state,
+    )
 
 
 def metrics_row_from_totals(
     totals: dict[str, int],
     error_threshold: float = 0.0,
 ) -> dict:
-    """Verdict row from carried scalars — the same formulas as
-    ``fd_metrics_from_state`` / ``ucc_metrics_from_state`` (IEEE-identical:
-    same integer inputs, same double division)."""
+    """Verdict row from carried scalars without a Spark job — the one
+    driver-side mirror of ``model.verdict_fold``'s ``pairs`` error and
+    ``holds`` rule (IEEE-identical: same integer inputs, same double
+    division)."""
     n = totals["total_rows"]
-    err = (
-        totals["conflicts"] / float(n * n - n) if n > 1 else 0.0
-    )
+    err = totals["conflicts"] / float(n * (n - 1)) if n > 1 else 0.0
     holds = (
         int(err <= error_threshold)
         if error_threshold > 0
@@ -304,32 +229,7 @@ def ucc_metrics_from_state(
     error_threshold: float = 0.0,
     by: Sequence[str] = (),
 ) -> DataFrame:
-    """UCC verdict from the key-count state — same AUCC rollup as
+    """UCC verdict from the key-count state — the same AUCC fold as
     ``ucc_metrics_df``."""
-    by = as_cols(by) if by else []
-    by = list(by)
-    viol = F.col("cnt") > 1
-    agg = state.groupBy(*by).agg(
-        F.coalesce(F.sum("cnt"), F.lit(0)).cast("long").alias("total_rows"),
-        F.coalesce(F.sum(F.when(viol, 1).otherwise(0)), F.lit(0))
-        .cast("long").alias("num_violating_clusters"),
-        F.coalesce(F.sum(F.when(viol, F.col("cnt")).otherwise(0)), F.lit(0))
-        .cast("long").alias("num_violating_rows"),
-        F.coalesce(F.sum(F.col("cnt") * (F.col("cnt") - 1)), F.lit(0))
-        .cast("long").alias("pairs2x"),
-    )
-    n = F.col("total_rows")
-    err = F.when(
-        n > 1, F.col("pairs2x").cast("double") / (n * (n - 1)).cast("double")
-    ).otherwise(F.lit(0.0))
-    holds = (
-        (F.col("error") <= F.lit(error_threshold))
-        if error_threshold > 0
-        else (F.col("num_violating_clusters") == 0)
-    )
-    return (
-        agg.withColumn("error", err)
-        .withColumn("holds", holds.cast("int"))
-        .select(*by, "total_rows", "num_violating_clusters",
-                "num_violating_rows", "error", "holds")
-    )
+    by = as_cols(by)
+    return _ucc_verdict(state, by, error_threshold).select(*by, *VERDICT_COLS)

@@ -30,10 +30,12 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from desbordante_spark.model import as_cols, FDResult
+from desbordante_spark.model import (
+    as_cols, capped_row_ids, FDResult, non_null, VERDICT_COLS, verdict_fold,
+)
 
 __all__ = ["fd_violations", "fd_verify", "fd_highlights", "fd_metrics_df",
            "pfd_metrics_df", "fd_unary_keys", "HIGHLIGHT_SORT_KEYS"]
@@ -71,17 +73,6 @@ def fd_unary_keys(df: DataFrame, cols: Sequence[str] | None = None) -> list[str]
     return [c for c in cols if c not in non_unique]
 
 
-def _lhs_base(df: DataFrame, lhs: Sequence[str], is_null_equal_null: bool) -> DataFrame:
-    if is_null_equal_null:
-        return df
-    # null != null: rows with a null LHS value are singletons in PLI(X) and
-    # can never conflict — drop them up front (isNotNull pushes down).
-    out = df
-    for c in lhs:
-        out = out.filter(F.col(c).isNotNull())
-    return out
-
-
 def _rhs_key(df: DataFrame, rhs: Sequence[str], is_null_equal_null: bool,
              row_id: str | None):
     """Grouping key expressions for the RHS side.
@@ -110,6 +101,41 @@ def _rhs_key(df: DataFrame, rhs: Sequence[str], is_null_equal_null: bool,
     return keys
 
 
+def _rhs_counts(
+    df: DataFrame,
+    lhs: Sequence[str],
+    rhs: Sequence[str],
+    is_null_equal_null: bool = True,
+    row_id: str | None = None,
+) -> DataFrame:
+    """Level 1: ``groupBy(X+Y).count()`` as ``(X..., Y keys..., cnt)`` —
+    also the incremental FD state (``dynamic.fd_state_init``). With null !=
+    null, rows with a null LHS value are singletons in PLI(X) and can never
+    conflict, so they are dropped up front."""
+    base = df if is_null_equal_null else non_null(df, lhs)
+    rhs_keys = _rhs_key(base, rhs, is_null_equal_null, row_id)
+    return base.groupBy(*[F.col(c) for c in lhs], *rhs_keys).agg(
+        F.count(F.lit(1)).alias("cnt")
+    )
+
+
+def _lhs_clusters(counts: DataFrame, lhs: Sequence[str]) -> DataFrame:
+    """Level 2: per-LHS-cluster statistics from level-1 counts, the shared
+    core of verdict + highlights.
+
+    Output: ``(X..., cluster_size, num_distinct_rhs, eq_pairs2x, max_rhs_cnt)``
+    where ``eq_pairs2x = sum_y cnt_y*(cnt_y-1)`` (ordered equal pairs within
+    the cluster) — so conflicting ordered pairs of the cluster are
+    ``cluster_size*(cluster_size-1) - eq_pairs2x``.
+    """
+    return counts.groupBy(*lhs).agg(
+        F.sum("cnt").alias("cluster_size"),
+        F.count(F.lit(1)).alias("num_distinct_rhs"),
+        F.sum(F.col("cnt") * (F.col("cnt") - 1)).alias("eq_pairs2x"),
+        F.max("cnt").alias("max_rhs_cnt"),
+    )
+
+
 def _cluster_stats(
     df: DataFrame,
     lhs: Sequence[str],
@@ -117,23 +143,19 @@ def _cluster_stats(
     is_null_equal_null: bool = True,
     row_id: str | None = None,
 ) -> DataFrame:
-    """Per-LHS-cluster statistics, the shared core of verdict + highlights.
-
-    Output: ``(X..., cluster_size, num_distinct_rhs, eq_pairs2x, max_rhs_cnt)``
-    where ``eq_pairs2x = sum_y cnt_y*(cnt_y-1)`` (ordered equal pairs within
-    the cluster) — so conflicting ordered pairs of the cluster are
-    ``cluster_size*(cluster_size-1) - eq_pairs2x``.
-    """
-    base = _lhs_base(df, lhs, is_null_equal_null)
-    rhs_keys = _rhs_key(base, rhs, is_null_equal_null, row_id)
-    lvl1 = base.groupBy(*[F.col(c) for c in lhs], *rhs_keys).agg(
-        F.count(F.lit(1)).alias("cnt")
+    """Levels 1 and 2 over a row frame (see ``_lhs_clusters``)."""
+    return _lhs_clusters(
+        _rhs_counts(df, lhs, rhs, is_null_equal_null, row_id), lhs
     )
-    return lvl1.groupBy(*lhs).agg(
-        F.sum("cnt").alias("cluster_size"),
-        F.count(F.lit(1)).alias("num_distinct_rhs"),
-        F.sum(F.col("cnt") * (F.col("cnt") - 1)).alias("eq_pairs2x"),
-        F.max("cnt").alias("max_rhs_cnt"),
+
+
+def _fd_verdict(
+    clusters: DataFrame, by: Sequence[str], error_threshold: float
+) -> DataFrame:
+    """g1 verdict over level-2 clusters: violating = more than one RHS."""
+    return verdict_fold(
+        clusters, by, "cluster_size", F.col("num_distinct_rhs") > 1, "pairs",
+        error_threshold, agreeing_pairs="eq_pairs2x",
     )
 
 
@@ -179,41 +201,9 @@ def fd_metrics_df(
     g1 error, int holds, cross-engine comparable."""
     lhs = as_cols(lhs)
     rhs = as_cols(rhs)
-    by = as_cols(by) if by else []
-    by = list(by)
-    stats = _cluster_stats(df, list(by) + list(lhs), rhs, is_null_equal_null,
-                           row_id)
-    viol = F.col("num_distinct_rhs") > 1
-    agg = stats.groupBy(*by).agg(
-        F.coalesce(F.sum("cluster_size"), F.lit(0)).cast("long").alias("total_rows"),
-        F.coalesce(F.sum(F.when(viol, 1).otherwise(0)), F.lit(0))
-        .cast("long").alias("num_violating_clusters"),
-        F.coalesce(
-            F.sum(F.when(viol, F.col("cluster_size")).otherwise(0)), F.lit(0)
-        ).cast("long").alias("num_violating_rows"),
-        F.coalesce(
-            F.sum(
-                F.col("cluster_size") * (F.col("cluster_size") - 1)
-                - F.col("eq_pairs2x")
-            ),
-            F.lit(0),
-        ).cast("long").alias("conflicts"),
-    )
-    n = F.col("total_rows")
-    err = F.when(
-        n > 1, F.col("conflicts").cast("double") / (n * n - n).cast("double")
-    ).otherwise(F.lit(0.0))
-    holds = (
-        (F.col("error") <= F.lit(error_threshold))
-        if error_threshold > 0
-        else (F.col("num_violating_clusters") == 0)
-    )
-    return (
-        agg.withColumn("error", err)
-        .withColumn("holds", holds.cast("int"))
-        .select(*by, "total_rows", "num_violating_clusters",
-                "num_violating_rows", "error", "holds")
-    )
+    by = as_cols(by)
+    stats = _cluster_stats(df, by + lhs, rhs, is_null_equal_null, row_id)
+    return _fd_verdict(stats, by, error_threshold).select(*by, *VERDICT_COLS)
 
 
 def pfd_metrics_df(
@@ -237,11 +227,10 @@ def pfd_metrics_df(
     """
     lhs = as_cols(lhs)
     rhs = as_cols(rhs)
-    by = as_cols(by) if by else []
+    by = as_cols(by)
     if error_measure not in ("per_tuple", "per_value"):
         raise ValueError(f"unknown error_measure {error_measure!r}")
-    by = list(by)
-    stats = _cluster_stats(df, list(by) + list(lhs), rhs, is_null_equal_null)
+    stats = _cluster_stats(df, by + lhs, rhs, is_null_equal_null)
     agg = stats.groupBy(*by).agg(
         F.coalesce(F.sum("cluster_size"), F.lit(0)).cast("long")
         .alias("total_rows"),
@@ -291,14 +280,8 @@ def fd_verify(
     m = fd_metrics_df(
         df, lhs, rhs, error_threshold, is_null_equal_null, row_id
     ).collect()[0]
-    n = int(m["total_rows"])
-    error = float(m["error"])
-    return FDResult(
-        holds=bool(m["holds"]),
-        error=error,
-        num_violating_clusters=int(m["num_violating_clusters"]),
-        num_violating_rows=int(m["num_violating_rows"]),
-        total_rows=n,
+    return FDResult.from_verdict(
+        m,
         violations=fd_violations(df, lhs, rhs, is_null_equal_null, row_id),
         lhs=tuple(lhs),
         rhs=tuple(rhs),
@@ -340,31 +323,9 @@ def fd_highlights(
     lhs = as_cols(lhs)
     rhs = as_cols(rhs)
     key = HIGHLIGHT_SORT_KEYS[sort_by]
-    viol = fd_violations(df, lhs, rhs, is_null_equal_null, row_id).alias("v")
-    rows = _lhs_base(df, lhs, is_null_equal_null).select(*lhs, row_id).alias("r")
-    cond = [F.col(f"r.{c}").eqNullSafe(F.col(f"v.{c}")) for c in lhs]
-    tagged = rows.join(viol, cond, "inner").select(
-        *[F.col(f"v.{c}") for c in lhs],
-        F.col(f"r.{row_id}"),
-        F.col("v.cluster_size"),
-        F.col("v.num_distinct_rhs"),
-        F.col("v.most_frequent_rhs_proportion"),
-        F.col("v.conflict_pairs"),
-    )
-    w = Window.partitionBy(*lhs).orderBy(F.col(row_id).asc())
-    capped = tagged.withColumn("_rn", F.row_number().over(w)).filter(
-        F.col("_rn") <= evidence_cap
-    )
-    out = capped.groupBy(
-        *lhs, "cluster_size", "num_distinct_rhs",
-        "most_frequent_rhs_proportion", "conflict_pairs"
-    ).agg(
-        F.max("_rn").alias("_seen"),
-        F.sort_array(F.collect_list(row_id)).alias("row_ids"),
-    ).select(
-        *lhs, "cluster_size", "num_distinct_rhs",
-        "most_frequent_rhs_proportion", "conflict_pairs", "row_ids",
-        (F.col("cluster_size") > F.col("_seen")).alias("truncated"),
+    out = capped_row_ids(
+        df, fd_violations(df, lhs, rhs, is_null_equal_null, row_id), lhs,
+        row_id, is_null_equal_null, evidence_cap,
     )
     if key is None:  # sort_by="lhs": order by the LHS value tuple
         return out.orderBy(

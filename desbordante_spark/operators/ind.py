@@ -25,19 +25,10 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from desbordante_spark.model import as_cols, INDResult
+from desbordante_spark.model import as_cols, INDResult, non_null, verdict_fold
 
 __all__ = ["ind_missing_values", "ind_verify", "ind_metrics_df",
            "ind_approx_check"]
-
-
-def _nn(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    # explicit isNotNull conjunction (pushes down to the parquet scan as
-    # IsNotNull; na.drop's AtLeastNNulls does not)
-    out = df
-    for c in cols:
-        out = out.filter(F.col(c).isNotNull())
-    return out
 
 
 def ind_missing_values(
@@ -51,14 +42,12 @@ def ind_missing_values(
     support: ``(X..., ref_count)``. Empty ⇒ the IND holds."""
     lhs = as_cols(lhs)
     rhs = as_cols(rhs)
-    lhs = list(lhs)
-    rhs = list(rhs)
     left = (
-        _nn(lhs_df, lhs)
+        non_null(lhs_df, lhs)
         .groupBy(*lhs)
         .agg(F.count(F.lit(1)).alias("ref_count"))
     )
-    right = _nn(rhs_df, rhs).select(*rhs).distinct()
+    right = non_null(rhs_df, rhs).select(*rhs).distinct()
     if broadcast_rhs:
         right = F.broadcast(right)
     cond = [left[a] == right[b] for a, b in zip(lhs, rhs)]
@@ -83,46 +72,42 @@ def ind_metrics_df(
     dimension) classifies each distinct LHS value in one pass — no separate
     anti-join + count jobs.
     """
+    by = as_cols(by)
+    verdict = _ind_verdict(
+        lhs_df, lhs, rhs_df, rhs, error_threshold, broadcast_rhs, by
+    )
+    return verdict.select(
+        *by,
+        F.col("num_clusters").alias("total_distinct"),
+        F.col("num_violating_clusters").alias("num_missing_values"),
+        "num_violating_rows", "error", "holds",
+    )
+
+
+def _ind_verdict(lhs_df, lhs, rhs_df, rhs, error_threshold, broadcast_rhs,
+                 by) -> DataFrame:
+    """The fold over distinct LHS values (one cluster each, sized by its
+    row support); violating = missing from the RHS domain."""
     lhs = as_cols(lhs)
     rhs = as_cols(rhs)
-    by = as_cols(by) if by else []
-    lhs = list(lhs)
-    rhs = list(rhs)
-    by = list(by)
     left = (
-        _nn(lhs_df, lhs)
+        non_null(lhs_df, lhs)
         .groupBy(*by, *lhs)
         .agg(F.count(F.lit(1)).alias("ref_count"))
         .alias("l")
     )
-    right = _nn(rhs_df, rhs).select(*rhs).distinct().alias("r")
+    right = non_null(rhs_df, rhs).select(*rhs).distinct().alias("r")
     if broadcast_rhs:
         right = F.broadcast(right)
     cond = [F.col(f"l.{a}") == F.col(f"r.{b}") for a, b in zip(lhs, rhs)]
-    joined = left.join(right, cond, "left")
-    miss = F.col(f"r.{rhs[0]}").isNull()
-    agg = joined.groupBy(*[F.col(f"l.{c}").alias(c) for c in by]).agg(
-        F.count(F.lit(1)).cast("long").alias("total_distinct"),
-        F.coalesce(F.sum(F.when(miss, 1).otherwise(0)), F.lit(0))
-        .cast("long").alias("num_missing_values"),
-        F.coalesce(F.sum(F.when(miss, F.col("ref_count")).otherwise(0)), F.lit(0))
-        .cast("long").alias("num_violating_rows"),
+    clusters = left.join(right, cond, "left").select(
+        *[F.col(f"l.{c}").alias(c) for c in by],
+        F.col("l.ref_count").alias("ref_count"),
+        F.col(f"r.{rhs[0]}").isNull().alias("missing"),
     )
-    err = F.when(
-        F.col("total_distinct") > 0,
-        F.col("num_missing_values").cast("double")
-        / F.col("total_distinct").cast("double"),
-    ).otherwise(F.lit(0.0))
-    holds = (
-        (F.col("error") <= F.lit(error_threshold))
-        if error_threshold > 0
-        else (F.col("num_missing_values") == 0)
-    )
-    return (
-        agg.withColumn("error", err)
-        .withColumn("holds", holds.cast("int"))
-        .select(*by, "total_distinct", "num_missing_values",
-                "num_violating_rows", "error", "holds")
+    return verdict_fold(
+        clusters, by, "ref_count", F.col("missing"), "clusters",
+        error_threshold,
     )
 
 
@@ -149,10 +134,10 @@ def ind_approx_check(
     ``ind_verify`` (the Faida→Spider two-phase trade)."""
     lhs = list(lhs)
     rhs = list(rhs)
-    l_proj = _nn(lhs_df, lhs).select(
+    l_proj = non_null(lhs_df, lhs).select(
         *[F.col(c).cast("string").alias(f"v{i}") for i, c in enumerate(lhs)]
     )
-    r_proj = _nn(rhs_df, rhs).select(
+    r_proj = non_null(rhs_df, rhs).select(
         *[F.col(c).cast("string").alias(f"v{i}") for i, c in enumerate(rhs)]
     )
     key = F.struct(*[F.col(f"v{i}") for i in range(len(lhs))])
@@ -195,16 +180,12 @@ def ind_verify(
     """
     lhs = as_cols(lhs)
     rhs = as_cols(rhs)
-    lhs = list(lhs)
-    m = ind_metrics_df(
-        lhs_df, lhs, rhs_df, rhs, error_threshold, broadcast_rhs
+    m = _ind_verdict(
+        lhs_df, lhs, rhs_df, rhs, error_threshold, broadcast_rhs, []
     ).collect()[0]
-    return INDResult(
-        holds=bool(m["holds"]),
-        error=float(m["error"]),
-        num_violating_clusters=int(m["num_missing_values"]),
-        num_violating_rows=int(m["num_violating_rows"]),
-        total_rows=int(m["total_distinct"]),
+    return INDResult.from_verdict(
+        m,
+        total_rows=int(m["num_clusters"]),
         violations=ind_missing_values(lhs_df, lhs, rhs_df, rhs, broadcast_rhs),
         lhs=tuple(lhs),
         rhs=tuple(rhs),

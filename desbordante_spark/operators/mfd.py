@@ -36,7 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from desbordante_spark.model import as_cols, MFDResult
+from desbordante_spark.model import as_cols, MFDResult, verdict_fold
 
 __all__ = ["mfd_cluster_diameters", "mfd_highlights", "mfd_verify"]
 
@@ -218,7 +218,6 @@ def mfd_cluster_diameters(
     """Per-X-cluster Y diameter: ``(X..., cluster_size, diameter, approximate)``."""
     lhs = as_cols(lhs)
     rhs = as_cols(rhs)
-    lhs = list(lhs)
     rhs = list(rhs)
     if metric == "euclidean" and len(rhs) == 1:
         return _euclid1d_diameters(df, lhs, rhs[0], dist_from_null_is_infinity)
@@ -262,7 +261,6 @@ def mfd_highlights(
     """
     lhs = as_cols(lhs)
     rhs = as_cols(rhs)
-    lhs = list(lhs)
     if metric == "euclidean":
         if len(rhs) != 1:
             raise ValueError("highlights: euclidean supports 1-D RHS")
@@ -357,21 +355,9 @@ def mfd_verify(
         df, lhs, rhs, metric, q, dist_from_null_is_infinity
     )
     viol = F.col("diameter") > parameter
-    m = diam.agg(
-        F.count(F.lit(1)).alias("nc"),
-        F.coalesce(F.sum(F.when(viol, 1).otherwise(0)), F.lit(0)).alias("nvc"),
-        F.coalesce(
-            F.sum(F.when(viol, F.col("cluster_size")).otherwise(0)), F.lit(0)
-        ).alias("nvr"),
-        F.coalesce(F.sum("cluster_size"), F.lit(0)).alias("n"),
-    ).collect()[0]
-    nvc = int(m["nvc"])
-    return MFDResult(
-        holds=nvc == 0,
-        error=nvc / int(m["nc"]) if int(m["nc"]) else 0.0,
-        num_violating_clusters=nvc,
-        num_violating_rows=int(m["nvr"]),
-        total_rows=int(m["n"]),
+    m = verdict_fold(diam, [], "cluster_size", viol, "clusters").collect()[0]
+    return MFDResult.from_verdict(
+        m,
         violations=diam.filter(viol),
         lhs=tuple(lhs),
         rhs=tuple(rhs),

@@ -25,14 +25,12 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from desbordante_spark.model import VerificationResult
+from desbordante_spark.model import (
+    as_cols, non_null, VerificationResult, verdict_fold,
+)
 from desbordante_spark.sources.readers import spread_small_input_by
 
 __all__ = ["od_violations", "od_verify"]
-
-
-def _cols(spec: str | Sequence[str]) -> list[str]:
-    return [spec] if isinstance(spec, str) else list(spec)
 
 
 def _od_groups(
@@ -43,27 +41,27 @@ def _od_groups(
     descending: bool,
 ):
     """Grouped frame with the windowed swap evidence:
-    ``(context..., lhs..., group_size, min_rhs, max_rhs, prev_extreme)``
-    where ``prev_extreme`` is the running max (asc) / min (desc) of the
-    preceding LHS groups' rhs extreme, plus the violation predicate."""
-    lhs_cols, rhs_cols, context = _cols(lhs), _cols(rhs), list(context)
-    base = df
-    for c in (*lhs_cols, *rhs_cols):
-        base = base.filter(F.col(c).isNotNull())
+    ``(keys..., group_size, min_rhs, max_rhs, prev_extreme)`` where
+    ``keys`` is context + lhs with each column once and ``prev_extreme`` is
+    the running max (asc) / min (desc) of the preceding LHS groups' rhs
+    extreme, plus the violation predicate."""
+    lhs_cols, rhs_cols, context = as_cols(lhs), as_cols(rhs), list(context)
+    keys = list(dict.fromkeys(context + lhs_cols))
+    base = non_null(df, lhs_cols + rhs_cols)
     if context:
         # by-context spread (see spread_small_input_by): HashPartitioning on
         # the context satisfies both the (context, lhs) aggregation and the
         # per-context window below, so an under-parallel input pays exactly
         # ONE shuffle and every later stage runs at full parallelism
         base = spread_small_input_by(
-            base.select(*context, *lhs_cols, *rhs_cols), context
+            base.select(*dict.fromkeys(keys + rhs_cols)), context
         )
     rk = (
         F.col(rhs_cols[0])
         if len(rhs_cols) == 1
         else F.struct(*[F.col(c) for c in rhs_cols])
     )
-    g = base.groupBy(*context, *lhs_cols).agg(
+    g = base.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("group_size"),
         F.min(rk).alias("min_rhs"),
         F.max(rk).alias("max_rhs"),
@@ -79,7 +77,7 @@ def _od_groups(
     else:
         g = g.withColumn("prev_extreme", F.max("max_rhs").over(w))
         viol = F.col("prev_extreme") > F.col("min_rhs")
-    return g, lhs_cols, context, viol
+    return g, keys, viol
 
 
 def od_violations(
@@ -95,9 +93,9 @@ def od_violations(
     mirrored for ``descending``). Rows with null lhs/rhs are excluded (no
     order position). ``lhs``/``rhs`` accept a column name or a column list
     (list-based OD, order/order.h:17-47)."""
-    g, lhs_cols, context, viol = _od_groups(df, lhs, rhs, context, descending)
+    g, keys, viol = _od_groups(df, lhs, rhs, context, descending)
     return g.filter(viol).select(
-        *context, *lhs_cols, "group_size", "min_rhs",
+        *keys, "group_size", "min_rhs",
         F.col("prev_extreme").alias("prev_max_rhs"),
     )
 
@@ -112,22 +110,12 @@ def od_verify(
     """OD verdict: holds iff no swap; error = violating-group fraction.
     Single action — total/violating group counts come from ONE aggregate
     over the windowed frame (no separate distinct().count() job)."""
-    g, lhs_cols, context, viol = _od_groups(df, lhs, rhs, context, descending)
-    m = g.agg(
-        F.count(F.lit(1)).alias("ng"),
-        F.coalesce(F.sum(F.when(viol, 1).otherwise(0)), F.lit(0)).alias("nvc"),
-        F.coalesce(
-            F.sum(F.when(viol, F.col("group_size")).otherwise(0)), F.lit(0)
-        ).alias("nvr"),
-    ).collect()[0]
-    nvc, ng = int(m["nvc"]), int(m["ng"])
-    return VerificationResult(
-        holds=nvc == 0,
-        error=nvc / ng if ng else 0.0,
-        num_violating_clusters=nvc,
-        num_violating_rows=int(m["nvr"]),
-        total_rows=ng,
+    g, _, viol = _od_groups(df, lhs, rhs, context, descending)
+    m = verdict_fold(g, [], "group_size", viol, "clusters").collect()[0]
+    return VerificationResult.from_verdict(
+        m,
+        total_rows=int(m["num_clusters"]),
         violations=od_violations(df, lhs, rhs, context, descending),
-        details={"lhs": tuple(_cols(lhs)), "rhs": tuple(_cols(rhs)),
+        details={"lhs": tuple(as_cols(lhs)), "rhs": tuple(as_cols(rhs)),
                  "context": tuple(context), "descending": descending},
     )

@@ -46,6 +46,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from desbordante_spark.operators.drift import _hist_bucket, drift_metrics
+
 __all__ = [
     "profile_state_init",
     "profile_state_merge",
@@ -169,32 +171,21 @@ def profile_apply_incremental(
     delta_state = profile_state_init(
         delta, columns=columns, by=by, lg_config_k=lg_config_k
     )
+    return _merge_touched(state, delta_state, profile_state_merge)
+
+
+def _merge_touched(state: DataFrame, delta_state: DataFrame, merge) -> DataFrame:
+    """Merge a delta's state into ``state`` partition by partition: the
+    partitions the delta does not touch pass through by anti-join, touched
+    ones are re-merged with ``merge``."""
     touched = delta_state.select("partition").distinct()
     untouched = state.join(F.broadcast(touched), ["partition"], "left_anti")
-    merged = profile_state_merge(
+    merged = merge(
         state.join(F.broadcast(touched), ["partition"], "left_semi"),
         delta_state,
     ).localCheckpoint(eager=True)  # pin the delta-sized slice so snapshot
     # chains do not stack lineage over every prior delta
     return untouched.unionByName(merged)
-
-
-def _hist_bucket(c: str, spec) -> F.Column:
-    """Bucket expression for one column — EXACTLY ``drift.histogram_sketch``'s
-    rule (``'discrete'`` → the value itself; a float → fixed-width
-    ``floor(v / width)``), so ``drift_from_state`` over an incrementally
-    maintained state equals ``drift_metrics(histogram_sketch(full_table))``
-    bit-for-bit — for a STRING partition column: ``hist_state_init`` casts
-    the partition key to string while ``histogram_sketch`` keeps its native
-    type, so with a non-string ``by`` column the two partition columns
-    differ in type (values are equal as strings). All gated uses pass
-    string keys. The global-min/max ``bins`` mode is deliberately absent:
-    its bin edges depend on the whole table, so it is not incrementally
-    mergeable."""
-    v = F.col(c)
-    if spec == "discrete":
-        return v.cast("string")
-    return F.floor(v / F.lit(float(spec))).cast("string")
 
 
 def hist_state_init(
@@ -207,11 +198,19 @@ def hist_state_init(
     built in ONE grouped scan (array + explode, no Expand; null values
     carry no position in a distribution and are dropped, matching
     ``drift.histogram_sketch``). Counts merge by ``+`` — the whole state
-    is exact, so snapshot-incremental maintenance is lossless."""
+    is exact, so snapshot-incremental maintenance is lossless.
+
+    Buckets use ``histogram_sketch``'s own rule, so ``drift_from_state``
+    equals ``drift_metrics(histogram_sketch(full_table))`` bit-for-bit for
+    a STRING ``by`` column (the state casts the key to string; the sketch
+    keeps its type). Its global-min/max ``bins`` mode is absent: those
+    edges depend on the whole table, so they are not mergeable."""
     if not specs:
         raise ValueError("specs must name at least one column")
     pairs = [
-        F.struct(F.lit(c).alias("column"), _hist_bucket(c, s).alias("bucket"))
+        F.struct(
+            F.lit(c).alias("column"), _hist_bucket(F.col(c), s).alias("bucket")
+        )
         for c, s in specs.items()
     ]
     e = df.select(
@@ -251,14 +250,7 @@ def hist_apply_incremental(
     partitions pass through by anti-join and are never re-aggregated).
     Exact: incremental ≡ full recompute bit-for-bit."""
     delta_state = hist_state_init(delta, specs, by=by)
-    touched = delta_state.select("partition").distinct()
-    untouched = state.join(F.broadcast(touched), ["partition"], "left_anti")
-    merged = hist_state_merge(
-        state.join(F.broadcast(touched), ["partition"], "left_semi"),
-        delta_state,
-    ).localCheckpoint(eager=True)  # pin the delta-sized slice (see
-    # profile_apply_incremental)
-    return untouched.unionByName(merged)
+    return _merge_touched(state, delta_state, hist_state_merge)
 
 
 def drift_from_state(
@@ -273,8 +265,6 @@ def drift_from_state(
     snapshots). The state slice for ``column`` IS a
     ``drift.histogram_sketch`` frame, so the verdict equals
     ``drift_metrics(histogram_sketch(full_table))`` exactly."""
-    from desbordante_spark.operators.drift import drift_metrics
-
     sk = state.filter(F.col("column") == column).select(
         "partition", "bucket", "cnt"
     )

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from desbordante_spark.model import VerificationResult
+from desbordante_spark.model import VerificationResult, verdict_fold
 
 __all__ = [
     "span_wellformed_violations",
@@ -87,6 +87,15 @@ def span_wellformed_violations(
     )
 
 
+def _span_verdict(df: DataFrame, spans_col: str, by) -> DataFrame:
+    """The fold with every doc its own one-row cluster, violating when it
+    breaks the invariant (flag projected once, not re-evaluated per
+    aggregate)."""
+    bad = F.size(_wellformed_reasons(spans_col)) > 0
+    docs = df.select(*by, bad.alias("_bad"))
+    return verdict_fold(docs, by, F.lit(1), F.col("_bad"), "clusters")
+
+
 def span_invariant_metrics_df(
     df: DataFrame,
     spans_col: str = "spans",
@@ -96,22 +105,8 @@ def span_invariant_metrics_df(
     num_violating_rows, error, holds)`` per ``by`` group (per-partition
     verdicts), global single row when empty."""
     by = list(by)
-    reasons = _wellformed_reasons(spans_col)
-    agg = df.groupBy(*by).agg(
-        F.count(F.lit(1)).cast("long").alias("total_rows"),
-        F.coalesce(F.sum((F.size(reasons) > 0).cast("long")), F.lit(0))
-        .cast("long").alias("num_violating_rows"),
-    )
-    return agg.select(
-        *by,
-        "total_rows",
-        "num_violating_rows",
-        F.when(
-            F.col("total_rows") > 0,
-            F.col("num_violating_rows").cast("double")
-            / F.col("total_rows").cast("double"),
-        ).otherwise(F.lit(0.0)).alias("error"),
-        (F.col("num_violating_rows") == 0).cast("int").alias("holds"),
+    return _span_verdict(df, spans_col, by).select(
+        *by, "total_rows", "num_violating_rows", "error", "holds"
     )
 
 
@@ -119,19 +114,9 @@ def span_invariant_verify(
     df: DataFrame, spans_col: str = "spans", id_cols: tuple[str, ...] = ("doc_id",)
 ) -> VerificationResult:
     """Verdict over the structural invariant: error = violating-row fraction."""
-    reasons = _wellformed_reasons(spans_col)
-    m = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum((F.size(reasons) > 0).cast("long")).alias("nv"),
-    ).collect()[0]
-    n, nv = int(m["n"]), int(m["nv"] or 0)
-    return VerificationResult(
-        holds=nv == 0,
-        error=nv / n if n else 0.0,
-        num_violating_clusters=nv,
-        num_violating_rows=nv,
-        total_rows=n,
-        violations=span_wellformed_violations(df, spans_col, id_cols),
+    m = _span_verdict(df, spans_col, []).collect()[0]
+    return VerificationResult.from_verdict(
+        m, violations=span_wellformed_violations(df, spans_col, id_cols)
     )
 
 

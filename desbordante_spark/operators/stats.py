@@ -234,7 +234,8 @@ def profile(
     out = wide.select(*by, F.explode("stats").alias("s")).select(*by, "s.*")
     if distinct_mode != "exact":
         return out
-    if stats is not None and "distinct_values" not in stats:
+    # is_categorical is derived from the exact distinct count as well
+    if stats is not None and not {"distinct_values", "is_categorical"} & set(stats):
         return out
     # exact distinct counts via ONE unpivoted single-distinct aggregation —
     # no Expand blowup, one shuffle of (column, value) pairs

@@ -24,6 +24,9 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from desbordante_spark.operators.drift import _hist_bucket, drift_metrics
+from desbordante_spark.operators.span_invariant import span_wellformed_violations
+
 __all__ = [
     "streaming_duplicate_alerts",
     "streaming_profile",
@@ -157,11 +160,8 @@ def streaming_histogram_sketch(
     streaming half of drift detection: pair with ``drift_foreach_batch``
     (or sink the sketch and run the batch ``drift_metrics``)."""
     v = F.col(value_col)
-    if discrete:
-        bucket = v.cast("string")
-    else:
-        width = bucket_width if bucket_width is not None else 1.0
-        bucket = F.floor(v / F.lit(float(width))).cast("string")
+    width = bucket_width if bucket_width is not None else 1.0
+    bucket = _hist_bucket(v, "discrete" if discrete else width)
     return (
         stream.filter(v.isNotNull())
         .withWatermark(event_time_col, watermark)
@@ -191,8 +191,6 @@ def drift_foreach_batch(
     stateful windowing stays streaming, the per-window verdict runs as a
     (tiny) batch job on finalized windows only.
     """
-    from desbordante_spark.operators.drift import drift_metrics
-
     def fn(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
@@ -221,16 +219,9 @@ def streaming_span_invariant(
     stream: DataFrame, spans_col: str = "spans",
     id_cols: Sequence[str] = ("doc_id",),
 ) -> DataFrame:
-    """Stateless span-invariant violations on a stream (same semantics as
-    the batch operator — row-local, no state)."""
-    from desbordante_spark.operators.span_invariant import _wellformed_reasons
-
-    reasons = _wellformed_reasons(spans_col)
-    return (
-        stream.withColumn("reasons", reasons)
-        .filter(F.size("reasons") > 0)
-        .select(*id_cols, "reasons")
-    )
+    """Stateless span-invariant violations on a stream — the batch
+    operator itself: it is row-local and keeps no state."""
+    return span_wellformed_violations(stream, spans_col, tuple(id_cols))
 
 
 def streaming_referential_alerts(

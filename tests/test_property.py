@@ -179,3 +179,146 @@ def test_hist_state_incremental_matches_full_and_bruteforce(
     brute = sorted((p, c, b, n) for (p, c, b), n in want.items())
     assert got_full == brute
     assert got_inc == brute
+
+
+# random frames for the verdict-fold equivalences: empty frames, all-null
+# key columns and a ``part`` column to group verdicts by
+FRAME_SCHEMA = "part string, k1 int, k2 int, v string"
+frames_strategy = st.one_of(
+    st.lists(
+        st.tuples(
+            st.sampled_from(["p", "q"]),
+            st.one_of(st.none(), st.integers(0, 3)),
+            st.one_of(st.none(), st.integers(0, 2)),
+            st.sampled_from(["a", "b", None]),
+        ),
+        max_size=25,
+    ),
+    st.lists(
+        st.tuples(st.sampled_from(["p", "q"]), st.none(), st.none(),
+                  st.sampled_from(["a", None])),
+        max_size=8,
+    ),
+)
+
+
+def _sorted_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+@settings(max_examples=8, deadline=None,
+          suppress_health_check=list(HealthCheck))
+@given(rows=frames_strategy, thr=st.sampled_from([0.0, 0.2]))
+def test_fd_state_and_totals_match_batch(spark, rows, thr):
+    """The FD verdict from the level-1 count state equals the batch verdict
+    bit-for-bit, per ``by`` group and globally, and the carried totals give
+    the same global row without a Spark job."""
+    from desbordante_spark.operators.dynamic import (
+        fd_metrics_from_state, fd_state_init, fd_totals_from_state,
+        metrics_row_from_totals,
+    )
+    from desbordante_spark.operators.fd import fd_metrics_df
+
+    df = spark.createDataFrame(rows, FRAME_SCHEMA)
+    for by in ([], ["part"]):
+        state = fd_state_init(df, [*by, "k1"], ["v"])
+        assert _sorted_rows(
+            fd_metrics_df(df, ["k1"], ["v"], thr, by=by)
+        ) == _sorted_rows(fd_metrics_from_state(state, ["k1"], thr, by))
+    batch = fd_metrics_df(df, ["k1"], ["v"], thr).collect()[0].asDict()
+    totals = fd_totals_from_state(fd_state_init(df, ["k1"], ["v"]), ["k1"])
+    assert batch == metrics_row_from_totals(totals, thr)
+
+
+@settings(max_examples=8, deadline=None,
+          suppress_health_check=list(HealthCheck))
+@given(rows=frames_strategy, thr=st.sampled_from([0.0, 0.2]))
+def test_ucc_state_and_totals_match_batch(spark, rows, thr):
+    """UCC analog of ``test_fd_state_and_totals_match_batch``."""
+    from desbordante_spark.operators.dynamic import (
+        metrics_row_from_totals, ucc_metrics_from_state, ucc_state_init,
+        ucc_totals_from_state,
+    )
+    from desbordante_spark.operators.ucc import ucc_metrics_df
+
+    df = spark.createDataFrame(rows, FRAME_SCHEMA)
+    for by in ([], ["part"]):
+        state = ucc_state_init(df, [*by, "k1", "k2"])
+        assert _sorted_rows(
+            ucc_metrics_df(df, ["k1", "k2"], error_threshold=thr, by=by)
+        ) == _sorted_rows(ucc_metrics_from_state(state, thr, by))
+    batch = ucc_metrics_df(df, ["k1", "k2"], error_threshold=thr)
+    totals = ucc_totals_from_state(ucc_state_init(df, ["k1", "k2"]))
+    assert batch.collect()[0].asDict() == metrics_row_from_totals(totals, thr)
+
+
+def _scalars(res):
+    return (res.holds, res.error, res.num_violating_clusters,
+            res.num_violating_rows, res.total_rows)
+
+
+def _fold_in_python(clusters):
+    """The cluster-fraction verdict over ``(size, violating)`` pairs:
+    ``(holds, error, violating clusters, violating rows, rows, clusters)``."""
+    nvc = sum(1 for _, bad in clusters if bad)
+    nvr = sum(size for size, bad in clusters if bad)
+    k = len(clusters)
+    return (nvc == 0, nvc / k if k else 0.0, nvc, nvr,
+            sum(size for size, _ in clusters), k)
+
+
+@settings(max_examples=8, deadline=None,
+          suppress_health_check=list(HealthCheck))
+@given(rows=frames_strategy, n_docs=st.integers(0, 20),
+       seed=st.integers(0, 3), every=st.sampled_from([0, 3]))
+def test_verify_scalars_equal_frame_rollups(spark, rows, n_docs, seed, every):
+    """``ind_verify``, ``od_verify``, ``mfd_verify`` and
+    ``span_invariant_verify`` report exactly the global row of their
+    metrics frame, or the rollup of their per-cluster frame."""
+    from pyspark.sql import functions as F
+
+    from desbordante_spark.operators.ind import ind_metrics_df, ind_verify
+    from desbordante_spark.operators.mfd import (
+        mfd_cluster_diameters, mfd_verify,
+    )
+    from desbordante_spark.operators.od import _od_groups, od_verify
+    from desbordante_spark.operators.span_invariant import (
+        span_invariant_metrics_df, span_invariant_verify,
+    )
+    from desbordante_spark.sources.interleaved import generate_documents
+
+    df = spark.createDataFrame(rows, FRAME_SCHEMA)
+    rhs_df = df.filter("k2 = 0")
+    m = ind_metrics_df(df, ["k1"], rhs_df, ["k1"]).collect()[0]
+    assert _scalars(ind_verify(df, ["k1"], rhs_df, ["k1"])) == (
+        bool(m["holds"]), m["error"], m["num_missing_values"],
+        m["num_violating_rows"], m["total_distinct"],
+    )
+
+    diam = mfd_cluster_diameters(df, ["k1"], ["k2"]).select(
+        "cluster_size", F.col("diameter") > 1.0
+    )
+    want = _fold_in_python([tuple(r) for r in diam.collect()])
+    assert _scalars(mfd_verify(df, ["k1"], ["k2"], 1.0)) == want[:5]
+
+    g, _, viol = _od_groups(df, "k1", "k2", ["part"], False)
+    holds, err, nvc, nvr, _, k = _fold_in_python(
+        [tuple(r) for r in g.select("group_size", viol).collect()]
+    )
+    assert _scalars(od_verify(df, "k1", "k2", ["part"])) == (
+        holds, err, nvc, nvr, k
+    )
+
+    docs = generate_documents(spark, n_docs, seed=seed, n_media=10,
+                              offset_viol_every=every)
+    m = span_invariant_metrics_df(docs).collect()[0]
+    res = span_invariant_verify(docs)
+    assert _scalars(res) == (
+        bool(m["holds"]), m["error"], m["num_violating_rows"],
+        m["num_violating_rows"], m["total_rows"],
+    )
+    per_part = span_invariant_metrics_df(docs, by=("part_key",)).collect()
+    assert sum(r["total_rows"] for r in per_part) == res.total_rows
+    assert sum(r["num_violating_rows"] for r in per_part) == (
+        res.num_violating_rows
+    )
