@@ -18,13 +18,17 @@ Spark-first strategy per metric:
 - **euclidean multi-dim** — exact pairwise diameter per cluster via
   ``applyInPandas`` (Arrow-batched NumPy, vectorized pairwise distances)
   over *distinct* Y points; clusters larger than ``max_points`` fall back to
-  the reference's 2-approximation (max distance from one anchor point;
-  approx flag reported).
+  the reference's 2-approximation (twice the max distance from one anchor
+  point; approx flag reported): by the triangle inequality
+  ``diameter <= approx <= 2 * diameter``.
 - **levenshtein** — pairwise over *distinct* Y strings per cluster using
   Spark's built-in JVM ``levenshtein()`` on a within-cluster self-join —
   stays in codegen, no Python.
 - **cosine** — q-gram vectors + pairwise cosine per cluster via
-  ``applyInPandas`` (NumPy matmul on the cluster's distinct strings).
+  ``applyInPandas`` (NumPy matmul on the cluster's distinct strings). Over
+  ``max_points`` it takes the same anchor fallback as the reference, but
+  1 − cosine is not a metric, so only ``approx <= 2 * diameter`` holds:
+  the fallback can under-report a diameter (approx flag reported).
 """
 
 from __future__ import annotations
@@ -158,12 +162,15 @@ def _cosine_diameters(df, lhs, rhs_col, q, null_inf, max_points):
         if len(strs) < 2:
             d = 0.0
         elif len(strs) > max_points:
-            # anchor 2-approximation (the reference's approx algorithm,
-            # metric_verifier.cpp): diameter <= 2 * max distance from any
-            # fixed point. Dict-based sparse dots — no O(c^2 * |vocab|)
-            # dense matrix, so a degenerate cluster with millions of
-            # distinct strings stays bounded per task. Anchor = lexical min
-            # string (deterministic under any partition order).
+            # anchor fallback (the reference's approx algorithm,
+            # metric_verifier.cpp, applies it to cosine too): 2 * the max
+            # distance from a member point. That is never above 2x the
+            # true diameter, but 1 - cosine is not a metric (no triangle
+            # inequality), so it is NOT an upper bound on the diameter:
+            # capped clusters can under-report. Dict-based sparse dots — no
+            # O(c^2 * |vocab|) dense matrix, so a degenerate cluster with
+            # millions of distinct strings stays bounded per task. Anchor =
+            # lexical min string (deterministic under any partition order).
             anchor = qgrams(min(strs))
             an = float(np.sqrt(sum(v * v for v in anchor.values()))) or 1.0
             dmax = 0.0

@@ -59,7 +59,7 @@ _LOWER = "abcdefghijklmnopqrstuvwxyz"
 _LETTERS = _UPPER + _LOWER
 
 
-def _stat_struct(c: str, dtype: T.DataType, distinct_mode: str,
+def _stat_struct(c: str, dtype: T.DataType, approx_distinct: bool,
                  categorical_threshold: int, quantile_accuracy: int,
                  stats: Sequence[str] | None = None):
     v = F.col(c)
@@ -71,15 +71,10 @@ def _stat_struct(c: str, dtype: T.DataType, distinct_mode: str,
     d = vv.cast("double") if is_num else F.lit(None).cast("double")
     ln = F.length(vv) if is_str else F.lit(None).cast("int")
 
-    if distinct_mode == "approx":
-        distinct = F.approx_count_distinct(vv)
-    elif distinct_mode == "none":
-        # exact distincts come from the separate unpivot job (see profile);
-        # multiple count_distinct aggregates in one pass would force a
-        # per-aggregate Expand of the input (measured 10-40x slower)
-        distinct = F.lit(None)
-    else:
-        distinct = F.count_distinct(vv)
+    # exact distincts come from the separate unpivot job (see profile);
+    # multiple count_distinct aggregates in one pass would force a
+    # per-aggregate Expand of the input (measured 10-40x slower)
+    distinct = F.approx_count_distinct(vv) if approx_distinct else F.lit(None)
 
     if is_num:
         quantiles = F.percentile_approx(
@@ -214,25 +209,29 @@ def profile(
     column (per ``by`` group when given — the north-rule per-partition
     profile rows).
 
-    ``distinct_mode``: 'exact' (count_distinct) or 'approx' (HLL++ sketch) —
-    use 'approx' at scale. Quantiles always use the percentile_approx sketch
-    (mergeable, single-pass; accuracy knob trades memory for error).
+    ``distinct_mode``: 'exact' (one unpivoted count-distinct job) or 'approx'
+    (HLL++ sketch) — use 'approx' at scale; anything else raises. Quantiles
+    always use the percentile_approx sketch (mergeable, single-pass; accuracy
+    knob trades memory for error).
     ``stats``: optional subset of stat names to compute (default all) — the
     explode reshape hides unused aggregates from Catalyst's pruning, so a
     caller that consumes only a few stats should name them here.
     """
+    if distinct_mode not in ("exact", "approx"):
+        raise ValueError(
+            f"distinct_mode must be 'exact' or 'approx', got {distinct_mode!r}"
+        )
     by = list(by)
     cols = list(columns) if columns else [c for c in df.columns if c not in by]
     dtypes = dict(zip(df.schema.names, [f.dataType for f in df.schema.fields]))
-    mode = "none" if distinct_mode == "exact" else distinct_mode
     structs = [
-        _stat_struct(c, dtypes[c], mode, categorical_threshold,
-                     quantile_accuracy, stats)
+        _stat_struct(c, dtypes[c], distinct_mode == "approx",
+                     categorical_threshold, quantile_accuracy, stats)
         for c in cols
     ]
     wide = df.groupBy(*by).agg(F.array(*structs).alias("stats"))
     out = wide.select(*by, F.explode("stats").alias("s")).select(*by, "s.*")
-    if distinct_mode != "exact":
+    if distinct_mode == "approx":
         return out
     # is_categorical is derived from the exact distinct count as well
     if stats is not None and not {"distinct_values", "is_categorical"} & set(stats):

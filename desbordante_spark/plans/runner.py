@@ -18,10 +18,13 @@ Checkpoint layout (``checkpoint_dir``):
   ``(snapshot_id, run_id, constraint, partition, total_rows,
   num_violating_clusters, num_violating_rows, error, holds, wall_ms,
   finished_at)``. This is both the lineage record and the resume marker.
-- On resume (same snapshot_id): completed (constraint, partition) pairs are
-  read back and their partitions are *anti-joined out* of the input before
-  each constraint runs — a re-run after an interrupt recomputes only the
-  missing partitions.
+- On resume (same snapshot_id): the checkpoint is read ONCE per run into a
+  driver-side ``{constraint: {partition}}``. Each constraint's input is
+  filtered on the ``cast(partition_col as string)`` value the checkpoint
+  stores (drift, whose baseline is the whole table, filters its collected
+  rows instead), so a re-run after an interrupt recomputes only the missing
+  partitions. A NULL partition key is never done. The checkpoint append and
+  the returned frame are built from the collected rows via one Arrow table.
 
 On a real Iceberg deployment ``snapshot_id`` is the table's snapshot id
 (``SELECT snapshot_id()``); here it is caller-provided. The checkpoint is
@@ -35,9 +38,11 @@ import uuid
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 __all__ = ["Constraint", "SuiteRunner"]
 
@@ -71,6 +76,9 @@ _METRICS_SCHEMA = T.StructType(
         T.StructField("finished_at", T.DoubleType()),
     ]
 )
+# driver-built frames go through a typed Arrow table: a Python list is
+# re-pickled through Python workers; pandas with Arrow off NaNs NULL longs
+_ARROW_SCHEMA = to_arrow_schema(_METRICS_SCHEMA)
 
 
 class SuiteRunner:
@@ -105,8 +113,25 @@ class SuiteRunner:
             )
         except AnalysisException as e:
             if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-                return self.spark.createDataFrame([], _METRICS_SCHEMA)
+                return self._frame([])
             raise
+
+    def _frame(self, rows: list[dict]) -> DataFrame:
+        return self.spark.createDataFrame(
+            pa.Table.from_pylist(rows, schema=_ARROW_SCHEMA), _METRICS_SCHEMA
+        )
+
+    def _done(self) -> dict[str, set[str]]:
+        """``{constraint: {partition}}`` verified under this snapshot. A NULL
+        partition is never done (in an IN-list it would null every NOT IN)."""
+        done: dict[str, set[str]] = {}
+        rows = self.read_metrics().filter(
+            (F.col("snapshot_id") == self.snapshot_id)
+            & F.col("partition").isNotNull()
+        ).select("constraint", "partition").collect()
+        for r in rows:
+            done.setdefault(r["constraint"], set()).add(r["partition"])
+        return done
 
     def completed_partitions(self, constraint: str) -> DataFrame:
         """Partitions already verified for this (snapshot, constraint)."""
@@ -134,7 +159,7 @@ class SuiteRunner:
                 is_null_equal_null=p.get("is_null_equal_null", True),
                 error_threshold=p.get("error_threshold", 0.0),
                 by=by,
-            ).withColumnRenamed("total_rows", "_total")
+            )
         elif c.kind == "fd":
             from desbordante_spark.operators.fd import fd_metrics_df
 
@@ -143,7 +168,7 @@ class SuiteRunner:
                 error_threshold=p.get("error_threshold", 0.0),
                 is_null_equal_null=p.get("is_null_equal_null", True),
                 by=by,
-            ).withColumnRenamed("total_rows", "_total")
+            )
         elif c.kind == "referential":
             from desbordante_spark.operators.ind import ind_metrics_df
 
@@ -154,7 +179,7 @@ class SuiteRunner:
                     error_threshold=p.get("error_threshold", 0.0),
                     by=by,
                 )
-                .withColumnRenamed("total_distinct", "_total")
+                .withColumnRenamed("total_distinct", "total_rows")
                 .withColumnRenamed("num_missing_values", "num_violating_clusters")
             )
         elif c.kind == "span":
@@ -162,24 +187,18 @@ class SuiteRunner:
                 span_invariant_metrics_df,
             )
 
-            m = (
-                span_invariant_metrics_df(df, p.get("spans_col", "spans"),
-                                          by=tuple(by))
-                .withColumnRenamed("total_rows", "_total")
-                .withColumn("num_violating_clusters",
-                            F.col("num_violating_rows"))
-            )
+            m = span_invariant_metrics_df(
+                df, p.get("spans_col", "spans"), by=tuple(by)
+            ).withColumn("num_violating_clusters", F.col("num_violating_rows"))
         elif c.kind == "drift":
             from desbordante_spark.operators.drift import (
                 drift_metrics,
                 histogram_sketch,
             )
 
-            value_expr = p.get("value_expr")
-            src = df
             vcol = p["value_col"]
-            if value_expr is not None:
-                src = df.withColumn(vcol, value_expr)
+            src = (df if p.get("value_expr") is None
+                   else df.withColumn(vcol, p["value_expr"]))
             sketch = histogram_sketch(
                 src, vcol, self.partition_col,
                 bucket_width=p.get("bucket_width"),
@@ -189,7 +208,7 @@ class SuiteRunner:
             dm = drift_metrics(sketch, ks_threshold=p.get("ks_threshold", 0.1))
             m = dm.select(
                 F.col("partition").alias(self.partition_col),
-                F.col("n_rows").alias("_total"),
+                F.col("n_rows").alias("total_rows"),
                 F.lit(0).cast("long").alias("num_violating_clusters"),
                 F.when(F.col("drifted") == 1, F.col("n_rows"))
                 .otherwise(F.lit(0)).cast("long").alias("num_violating_rows"),
@@ -197,22 +216,20 @@ class SuiteRunner:
                 (1 - F.col("drifted")).cast("int").alias("holds"),
             )
         elif c.kind == "custom":
-            m = p["fn"](df, by).withColumnRenamed("total_rows", "_total")
+            m = p["fn"](df, by)
         else:
             raise ValueError(f"unknown constraint kind {c.kind!r}")
 
-        cols = dict.fromkeys(m.columns)
-        ncl = (
-            F.col("num_violating_clusters").cast("long")
-            if "num_violating_clusters" in cols else F.lit(None).cast("long")
-        )
+        if "num_violating_clusters" not in m.columns:
+            m = m.withColumn("num_violating_clusters", F.lit(None))
         return m.select(
             F.lit(self.snapshot_id).alias("snapshot_id"),
             F.lit(self.run_id).alias("run_id"),
             F.lit(c.name).alias("constraint"),
             F.col(self.partition_col).cast("string").alias("partition"),
-            F.col("_total").cast("long").alias("total_rows"),
-            ncl.alias("num_violating_clusters"),
+            F.col("total_rows").cast("long").alias("total_rows"),
+            F.col("num_violating_clusters").cast("long")
+            .alias("num_violating_clusters"),
             F.col("num_violating_rows").cast("long").alias("num_violating_rows"),
             F.col("error").cast("double").alias("error"),
             F.col("holds").cast("int").alias("holds"),
@@ -234,47 +251,30 @@ class SuiteRunner:
         aux = aux or {}
         sc_conf = self.spark.conf
         default_sp = sc_conf.get("spark.sql.shuffle.partitions")
-        all_out = []
+        done = self._done() if resume else {}
+        key = F.col(self.partition_col).cast("string")
+        all_rows: list[dict] = []
         for c in constraints:
             t0 = time.monotonic()
-            work = df
-            done = None
-            if resume:
-                d = self.completed_partitions(c.name)
-                if d.limit(1).count() > 0:
-                    done = d
-            # drift needs the full input (its baseline is the whole table);
-            # completed partitions are dropped from the OUTPUT instead
-            if done is not None and c.kind != "drift":
-                work = df.join(
-                    F.broadcast(done),
-                    df[self.partition_col] == done["partition"],
-                    "left_anti",
-                )
+            skip = done.get(c.name, set())
+            # drift's baseline is the whole input: it drops finished rows instead
+            work = (df if not skip or c.kind == "drift"
+                    else df.filter(key.isNull() | ~key.isin(sorted(skip))))
             if c.shuffle_partitions:
                 sc_conf.set("spark.sql.shuffle.partitions",
                             str(c.shuffle_partitions))
             try:
-                m = self._metrics_for(c, work, aux)
-                if done is not None and c.kind == "drift":
-                    m = m.join(F.broadcast(done), ["partition"], "left_anti")
-                rows = m.collect()
+                rows = self._metrics_for(c, work, aux).collect()
             finally:
                 if c.shuffle_partitions:
                     sc_conf.set("spark.sql.shuffle.partitions", default_sp)
             wall_ms = int((time.monotonic() - t0) * 1000)
             now = time.time()
-            rows = [
-                (*r, wall_ms, now) for r in rows
-            ]
-            out = self.spark.createDataFrame(rows, _METRICS_SCHEMA)
-            out.write.mode("append").parquet(self._metrics_path())
-            all_out.append(out)
+            rows = [{**r.asDict(), "wall_ms": wall_ms, "finished_at": now}
+                    for r in rows if r["partition"] not in skip]
+            # the append is the resume marker: one per constraint
+            self._frame(rows).write.mode("append").parquet(self._metrics_path())
+            all_rows += rows
             if on_progress:
                 on_progress(c.name, len(rows))
-        if not all_out:
-            return self.spark.createDataFrame([], _METRICS_SCHEMA)
-        result = all_out[0]
-        for o in all_out[1:]:
-            result = result.unionByName(o)
-        return result
+        return self._frame(all_rows)

@@ -1,9 +1,9 @@
 """Round-7 optimization regression tests.
 
 Covers the optimization-round invariants:
-- the cosine MFD path is BOUNDED per group (max_points anchor 2-approx
-  fallback, the round-6 verdict's one scale-killer) and still exact under
-  the cap;
+- the cosine MFD path is BOUNDED per group (max_points anchor fallback,
+  the round-6 verdict's one scale-killer) and still exact under the cap;
+  the euclidean multi-dim fallback is a two-sided 2-approximation;
 - ``profile(stats=...)`` subsets aggregate exactly what the full profile
   computes for those stats (and the name table stays in lockstep with the
   struct construction order);
@@ -42,8 +42,9 @@ def test_cosine_hot_cluster_bounded(spark):
             df, ["k"], ["s"], metric="cosine", max_points=50
         ).collect()
     }
-    # hot cluster took the anchor fallback: flagged, bounded, and within the
-    # 2-approximation guarantee (exact <= approx <= 2 * exact <= 2.0)
+    # hot cluster took the anchor fallback: flagged and bounded. 1 - cosine
+    # of non-negative q-gram counts is at most 1, so approx <= 2.0; it is
+    # not a metric, so approx need not be >= the exact diameter
     assert d["hot"]["approximate"] is True
     assert 0.0 < d["hot"]["diameter"] <= 2.0
     # cold cluster stays exact
@@ -52,6 +53,9 @@ def test_cosine_hot_cluster_bounded(spark):
 
 
 def test_cosine_approx_upper_bounds_exact(spark):
+    """The cosine fallback is at most twice the exact diameter: the anchor
+    is a member of the cluster, so every anchor distance is a pairwise one.
+    1 - cosine has no triangle inequality, so there is no lower bound."""
     df = _hot_cluster_df(spark, 120)
     exact = {
         r["k"]: r["diameter"]
@@ -65,8 +69,34 @@ def test_cosine_approx_upper_bounds_exact(spark):
             df, ["k"], ["s"], metric="cosine", max_points=30
         ).collect()
     }
-    assert exact["hot"] <= approx["hot"] + 1e-9
     assert approx["hot"] <= 2.0 * exact["hot"] + 1e-9
+
+
+def test_euclidean_nd_approx_two_sided(spark):
+    """Euclidean distance is a metric, so the multi-dim anchor fallback
+    brackets the exact diameter: exact <= approx <= 2 * exact."""
+    rows = [("hot", float(i % 17), float((i * 7) % 23), float(i % 5))
+            for i in range(200)]
+    rows += [("cold", 0.0, 0.0, 0.0), ("cold", 3.0, 4.0, 0.0)]
+    df = spark.createDataFrame(rows, "k string, x double, y double, z double")
+
+    def diameters(max_points):
+        return {
+            r["k"]: r
+            for r in mfd_cluster_diameters(
+                df, ["k"], ["x", "y", "z"], max_points=max_points
+            ).collect()
+        }
+
+    exact, approx = diameters(1000), diameters(30)
+    assert exact["hot"]["approximate"] is False
+    assert approx["hot"]["approximate"] is True
+    e, a = exact["hot"]["diameter"], approx["hot"]["diameter"]
+    assert 0.0 < e <= a + 1e-9
+    assert a <= 2.0 * e + 1e-9
+    # under the cap the cluster stays exact
+    assert approx["cold"]["approximate"] is False
+    assert approx["cold"]["diameter"] == pytest.approx(5.0)
 
 
 # ------------------------------------------------- profile stat subsets

@@ -134,3 +134,116 @@ def test_runner_fd_and_custom_kinds(spark, env):
     assert len(rows) == 32
     fd_rows = [r for (c, _), r in rows.items() if c == "docid_determines_part"]
     assert all(r["holds"] == 1 for r in fd_rows)
+
+
+def _key(r):
+    """A verdict row without the per-run fields (run id and timings)."""
+    d = r.asDict()
+    for k in ("run_id", "wall_ms", "finished_at"):
+        d.pop(k)
+    return tuple(sorted(d.items()))
+
+
+def test_resume_reverifies_null_partition_keys(spark, env):
+    """Rows with a NULL partition key are never counted as done: a resumed
+    run re-verifies them, and only them."""
+    docs, catalog, ckpt = env
+    nulled = docs.withColumn(
+        "part_key",
+        F.when(F.col("part_key") == "p003", F.lit(None))
+        .otherwise(F.col("part_key")),
+    )
+    suite = [_suite()[0]]
+    first = SuiteRunner(spark, ckpt, "s").run(nulled, suite)
+    assert sorted(r["partition"] or "" for r in first.collect()) == (
+        [""] + [f"p{i:03d}" for i in range(16) if i != 3]
+    )
+    again = SuiteRunner(spark, ckpt, "s").run(nulled, suite).collect()
+    assert [r["partition"] for r in again] == [None]
+    assert again[0]["total_rows"] == docs.filter("part_key = 'p003'").count()
+
+
+def test_drift_resume_returns_missing_partitions(spark, env):
+    """Drift's baseline is the whole table, so a resumed drift run computes
+    over the full input but returns only the partitions the checkpoint
+    lacks, with the verdicts a fresh run gives them."""
+    docs, catalog, ckpt = env
+    drift = [_suite()[3]]
+    fresh = {
+        r["partition"]: _key(r)
+        for r in SuiteRunner(spark, ckpt + "_fresh", "s").run(docs, drift)
+        .collect()
+    }
+    half = docs.filter(F.col("part_key") < "p008")
+    assert SuiteRunner(spark, ckpt, "s").run(half, drift).count() == 8
+    resumed = SuiteRunner(spark, ckpt, "s").run(docs, drift).collect()
+    assert sorted(r["partition"] for r in resumed) == [
+        f"p{i:03d}" for i in range(8, 16)
+    ]
+    assert all(_key(r) == fresh[r["partition"]] for r in resumed)
+    assert SuiteRunner(spark, ckpt, "s").run(docs, drift).count() == 0
+
+
+def test_custom_without_cluster_count_writes_null(spark, env):
+    """A custom constraint whose frame has no ``num_violating_clusters``
+    gets NULL there, in the checkpoint and in the returned frame alike."""
+    docs, catalog, ckpt = env
+
+    def fn(df, by):
+        return df.groupBy(*by).agg(
+            F.count(F.lit(1)).alias("total_rows"),
+            F.lit(0).alias("num_violating_rows"),
+            F.lit(0.0).alias("error"),
+            F.lit(1).alias("holds"),
+        )
+
+    runner = SuiteRunner(spark, ckpt, "s")
+    out = runner.run(docs, [Constraint("rows", "custom", {"fn": fn})])
+    rows = out.collect()
+    assert len(rows) == 16
+    assert all(r["num_violating_clusters"] is None for r in rows)
+    assert sum(r["total_rows"] for r in rows) == N_DOCS
+    saved = runner.read_metrics().collect()
+    assert sorted(map(_key, saved)) == sorted(map(_key, rows))
+
+
+def test_suite_rows_same_with_arrow_off(spark, env):
+    """The verdict rows do not depend on the session's Arrow conversion
+    setting (off by default in a bare spark-submit session)."""
+    docs, catalog, ckpt = env
+    conf = "spark.sql.execution.arrow.pyspark.enabled"
+    aux = {"media_catalog": catalog}
+    on = SuiteRunner(spark, ckpt + "_on", "s").run(docs, _suite(), aux=aux)
+    want = sorted(map(_key, on.collect()))
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        off = SuiteRunner(spark, ckpt + "_off", "s").run(docs, _suite(), aux=aux)
+        got = sorted(map(_key, off.collect()))
+    finally:
+        spark.conf.set(conf, before)
+    assert len(got) == 64
+    assert got == want
+
+
+def test_run_job_count(spark, tmp_path):
+    """A resumed run plus the caller's collect of its frame launches one
+    checkpoint scan, each constraint's own jobs and one append per
+    constraint — 15 jobs here. Before the resume set moved to the driver it
+    took 23: a probe job per constraint, the anti-joins, and a union
+    collect that re-ran every appended list frame. A seed no other test
+    uses keeps drift's cached sketch from being reused."""
+    docs = generate_documents(spark, 200, seed=4242, dup_pairs=1, n_media=50)
+    suite = [_suite()[0], _suite()[3]]
+    ckpt = str(tmp_path / "ckpt")
+    half = docs.filter(F.col("part_key") < "p008")
+    SuiteRunner(spark, ckpt, "s").run(half, suite).collect()
+    runner = SuiteRunner(spark, ckpt, "s")
+    sc = spark.sparkContext
+    sc.setJobGroup("runner-jobs", "runner-jobs")
+    try:
+        out = runner.run(docs, suite).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(out) == 16
+    assert len(sc.statusTracker().getJobIdsForGroup("runner-jobs")) == 15

@@ -113,6 +113,14 @@ def test_approx_mode(fixture_df):
     assert rows["col_int"]["distinct_values"] == 5
 
 
+@pytest.mark.parametrize("mode", ["aprox", "none", "EXACT"])
+def test_unknown_distinct_mode_raises(fixture_df, mode):
+    # a typo must not fall back to one count_distinct per column in a
+    # single aggregate (the per-aggregate Expand the profiler avoids)
+    with pytest.raises(ValueError, match="distinct_mode"):
+        profile(fixture_df, ["col_int"], distinct_mode=mode)
+
+
 def test_geometric_mean(prof):
     import math
     r = prof["col_int"]
