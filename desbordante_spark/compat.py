@@ -1085,18 +1085,14 @@ class _afd_verification:
 
 class _UccVerifierBase(_Algo):
     def execute(self, ucc_indices=None, error=None, **_kw):
-        from desbordante_spark.operators.ucc import (
-            ucc_verify,
-            ucc_violating_clusters,
-        )
+        from desbordante_spark.operators.ucc import ucc_verify
 
         cols = self._names(ucc_indices or [])
         self._res = ucc_verify(
             self._df, cols, error_threshold=error or 0.0, row_id=self._rid
         )
         self._clusters = (
-            [list(r["row_ids"]) for r in ucc_violating_clusters(
-                self._df, cols, self._rid).collect()]
+            [list(r["row_ids"]) for r in self._res.violations.collect()]
             if self._rid else None
         )
         return self

@@ -19,8 +19,9 @@ src/core/algorithms/fd/fd_verifier/highlight.h:11-35). Evidence row lists are
 capped (``evidence_cap``) while all counts stay exact.
 
 Shared plan builders live here too: ``verdict_fold`` rolls up every
-verifier's verdict, and ``capped_row_ids`` builds the UCC/FD row-id
-evidence.
+verifier's verdict, ``checkpointed_verdict`` folds a verify call's
+per-cluster frame once and keeps its violating clusters for the evidence,
+and ``capped_row_ids`` builds the UCC/FD row-id evidence.
 """
 
 from __future__ import annotations
@@ -28,7 +29,8 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Any, Optional
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 
@@ -82,42 +84,97 @@ def verdict_fold(
     ``holds`` (int 1/0) is ``error <= error_threshold`` when the threshold
     is positive, else "no violating cluster". ``metrics_row_from_totals``
     in ``operators/dynamic.py`` is the driver-side mirror of ``pairs``."""
+    return clusters.groupBy(*by).agg(
+        *_fold_aggs(size, violating, error, error_threshold, agreeing_pairs)
+    )
+
+
+def _fold_aggs(
+    size: str | Column,
+    violating: Column,
+    error: str,
+    error_threshold: float,
+    agreeing_pairs: str | None,
+) -> list[Column]:
+    """``verdict_fold``'s output columns as aggregate expressions, usable
+    in ``agg`` and in ``observe`` alike."""
     size = F.col(size) if isinstance(size, str) else size
 
     def total(x):
         return F.coalesce(F.sum(x), F.lit(0)).cast("long")
 
+    total_rows = total(size)
+    num_clusters = F.count(F.lit(1)).cast("long")
+    num_violating = total(F.when(violating, 1).otherwise(0))
     aggs = [
-        total(size).alias("total_rows"),
-        F.count(F.lit(1)).cast("long").alias("num_clusters"),
-        total(F.when(violating, 1).otherwise(0)).alias("num_violating_clusters"),
+        total_rows.alias("total_rows"),
+        num_clusters.alias("num_clusters"),
+        num_violating.alias("num_violating_clusters"),
         total(F.when(violating, size).otherwise(0)).alias("num_violating_rows"),
     ]
     if error == "pairs":
         pairs = size * (size - 1)
         if agreeing_pairs is not None:
             pairs = pairs - F.col(agreeing_pairs)
-        aggs.append(total(pairs).alias("conflicts"))
-        n = F.col("total_rows")
-        num, den, nonempty = F.col("conflicts"), n * (n - 1), n > 1
+        conflicts = total(pairs)
+        aggs.append(conflicts.alias("conflicts"))
+        n = total_rows
+        num, den, nonempty = conflicts, n * (n - 1), n > 1
     elif error == "clusters":
-        k = F.col("num_clusters")
-        num, den, nonempty = F.col("num_violating_clusters"), k, k > 0
+        k = num_clusters
+        num, den, nonempty = num_violating, k, k > 0
     else:
         raise ValueError(f"unknown error kind {error!r}")
     err = F.when(
         nonempty, num.cast("double") / den.cast("double")
     ).otherwise(F.lit(0.0))
     holds = (
-        (F.col("error") <= F.lit(error_threshold))
+        (err <= F.lit(error_threshold))
         if error_threshold > 0
-        else (F.col("num_violating_clusters") == 0)
+        else (num_violating == 0)
     )
-    return (
-        clusters.groupBy(*by).agg(*aggs)
-        .withColumn("error", err)
-        .withColumn("holds", holds.cast("int"))
+    return [*aggs, err.alias("error"), holds.cast("int").alias("holds")]
+
+
+def checkpointed_verdict(
+    clusters: DataFrame,
+    size: str | Column,
+    violating: Column,
+    error: str,
+    error_threshold: float = 0.0,
+    agreeing_pairs: str | None = None,
+) -> tuple[dict[str, Any], DataFrame]:
+    """One verify call's verdict and evidence from ONE computation of its
+    per-cluster frame (arguments as ``verdict_fold``'s, with no ``by``).
+    Returns ``(verdict, kept)``: ``verdict`` is the fold's global row as a
+    dict, and ``kept`` is the violating clusters, materialized as a local
+    checkpoint. One action computes ``clusters``, observes the fold's
+    aggregates over every cluster and writes only the violating ones, so
+    the checkpoint grows with the violations, not with the input. The
+    evidence (a projection of ``kept``) reads those blocks instead of
+    re-running the scan, exchange, aggregation and window, and the verdict
+    counts and the evidence rows come from one snapshot of the input.
+
+    Policy: the blocks are kept ``DISK_ONLY``. The default
+    MEMORY_AND_DISK level raised the driver's peak RSS (on-heap blocks
+    stay until the JVM collects the frame), and ``cache()`` would need an
+    ``unpersist`` that a lazy evidence frame cannot schedule; local
+    checkpoint blocks are freed by Spark's ContextCleaner once ``kept`` is
+    unreachable. Trade-off: a local checkpoint cuts lineage, so losing the
+    executor that holds the blocks makes the evidence frame unreadable (it
+    raises; it never returns wrong rows). The verdict scalars are already
+    on the driver by then."""
+    verdict = Observation()
+    kept = (
+        clusters.observe(
+            verdict,
+            *_fold_aggs(size, violating, error, error_threshold,
+                        agreeing_pairs),
+        )
+        .filter(violating)
+        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
     )
+    return verdict.get, kept
 
 
 def capped_row_ids(

@@ -23,7 +23,8 @@ Spark-first design: no PLI intersection — refining PLI(X) by Y *is*
 aggregation: level 1 ``groupBy(X+Y).count()`` (map-side partial agg absorbs
 hot keys), level 2 ``groupBy(X)`` rolling up cluster size, #distinct Y,
 within-Y equal pairs and the max Y frequency, then a final global rollup.
-Evidence is a separate lazy DataFrame. No driver-side loops.
+``fd_verify``'s evidence reads the violating level-2 stats that job
+checkpointed. No driver-side loops.
 """
 
 from __future__ import annotations
@@ -34,7 +35,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from desbordante_spark.model import (
-    as_cols, capped_row_ids, FDResult, non_null, VERDICT_COLS, verdict_fold,
+    as_cols, capped_row_ids, checkpointed_verdict, FDResult, non_null,
+    VERDICT_COLS, verdict_fold,
 )
 
 __all__ = ["fd_violations", "fd_verify", "fd_highlights", "fd_metrics_df",
@@ -171,7 +173,13 @@ def fd_violations(
     (highlight.h:11-35) without the per-row lists."""
     lhs = as_cols(lhs)
     rhs = as_cols(rhs)
-    stats = _cluster_stats(df, lhs, rhs, is_null_equal_null, row_id)
+    return _violating_clusters(
+        _cluster_stats(df, lhs, rhs, is_null_equal_null, row_id), lhs
+    )
+
+
+def _violating_clusters(stats: DataFrame, lhs: list[str]) -> DataFrame:
+    """The ``fd_violations`` rows of level-2 cluster stats."""
     return stats.filter(F.col("num_distinct_rhs") > 1).select(
         *lhs,
         "cluster_size",
@@ -273,16 +281,20 @@ def fd_verify(
 
     ``error`` is g1 with denominator ``n^2 - n`` (stats_calculator.cpp:83);
     ``holds`` is exact-FD (no violating cluster) when ``error_threshold == 0``
-    else the AFD comparison ``g1 <= threshold``.
+    else the AFD comparison ``g1 <= threshold``. ``violations`` are the
+    ``fd_violations`` rows of the violating cluster stats the verdict
+    checkpointed.
     """
     lhs = as_cols(lhs)
     rhs = as_cols(rhs)
-    m = fd_metrics_df(
-        df, lhs, rhs, error_threshold, is_null_equal_null, row_id
-    ).collect()[0]
+    m, stats = checkpointed_verdict(
+        _cluster_stats(df, lhs, rhs, is_null_equal_null, row_id),
+        "cluster_size", F.col("num_distinct_rhs") > 1, "pairs",
+        error_threshold, agreeing_pairs="eq_pairs2x",
+    )
     return FDResult.from_verdict(
         m,
-        violations=fd_violations(df, lhs, rhs, is_null_equal_null, row_id),
+        violations=_violating_clusters(stats, lhs),
         lhs=tuple(lhs),
         rhs=tuple(rhs),
         details={"error_threshold": error_threshold,

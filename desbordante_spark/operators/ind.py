@@ -11,11 +11,12 @@ Reference semantics (/root/reference):
   SQL FK semantics and Spider's ignore-null handling, config/names.h:54
   ``ignore_null_cols``).
 
-Spark-first design: distinct-domain containment is an anti-join on
-``distinct()`` projections. For the north-rule referential check
-(span ``media_ref`` → media catalog) the RHS is a dimension table —
-broadcast it so the probe side never shuffles. Error metrics come from one
-job over the anti-join counts.
+Spark-first design: distinct-domain containment is a left join of the
+distinct LHS values against the ``distinct()`` RHS domain. For the
+north-rule referential check (span ``media_ref`` → media catalog) the RHS
+is a dimension table — broadcast it so the probe side never shuffles.
+Error metrics come from one job over the joined clusters, and
+``ind_verify``'s evidence reads the missing values that job checkpointed.
 """
 
 from __future__ import annotations
@@ -25,7 +26,9 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from desbordante_spark.model import as_cols, INDResult, non_null, verdict_fold
+from desbordante_spark.model import (
+    as_cols, checkpointed_verdict, INDResult, non_null, verdict_fold,
+)
 
 __all__ = ["ind_missing_values", "ind_verify", "ind_metrics_df",
            "ind_approx_check"]
@@ -41,17 +44,39 @@ def ind_missing_values(
     """Distinct LHS value combinations absent from the RHS, with their row
     support: ``(X..., ref_count)``. Empty ⇒ the IND holds."""
     lhs = as_cols(lhs)
+    clusters = _ind_clusters(lhs_df, lhs, rhs_df, rhs, broadcast_rhs)
+    return _missing(clusters, lhs)
+
+
+def _ind_clusters(lhs_df, lhs, rhs_df, rhs, broadcast_rhs,
+                  by=()) -> DataFrame:
+    """One row per distinct LHS value (per ``by`` group), sized by its row
+    support: ``(by..., X..., ref_count, missing)``. A left join against the
+    distinct RHS domain (broadcast when it's a dimension) classifies each
+    value in one pass; ``missing`` = absent from the RHS."""
+    lhs = as_cols(lhs)
     rhs = as_cols(rhs)
+    keys = list(dict.fromkeys([*by, *lhs]))
     left = (
         non_null(lhs_df, lhs)
-        .groupBy(*lhs)
+        .groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("ref_count"))
+        .alias("l")
     )
-    right = non_null(rhs_df, rhs).select(*rhs).distinct()
+    right = non_null(rhs_df, rhs).select(*rhs).distinct().alias("r")
     if broadcast_rhs:
         right = F.broadcast(right)
-    cond = [left[a] == right[b] for a, b in zip(lhs, rhs)]
-    return left.join(right, cond, "left_anti")
+    cond = [F.col(f"l.{a}") == F.col(f"r.{b}") for a, b in zip(lhs, rhs)]
+    return left.join(right, cond, "left").select(
+        *[F.col(f"l.{c}").alias(c) for c in keys],
+        F.col("l.ref_count").alias("ref_count"),
+        F.col(f"r.{rhs[0]}").isNull().alias("missing"),
+    )
+
+
+def _missing(clusters: DataFrame, lhs: list[str]) -> DataFrame:
+    """The ``ind_missing_values`` rows of ``_ind_clusters``."""
+    return clusters.filter(F.col("missing")).select(*lhs, "ref_count")
 
 
 def ind_metrics_df(
@@ -68,13 +93,12 @@ def ind_metrics_df(
     ``by`` group of the LHS table (per-partition verdicts), global single row
     when empty.
 
-    A left join against the distinct RHS domain (broadcast when it's a
-    dimension) classifies each distinct LHS value in one pass — no separate
-    anti-join + count jobs.
+    One fold over ``_ind_clusters`` — no separate anti-join + count jobs.
     """
     by = as_cols(by)
-    verdict = _ind_verdict(
-        lhs_df, lhs, rhs_df, rhs, error_threshold, broadcast_rhs, by
+    verdict = _ind_fold(
+        _ind_clusters(lhs_df, lhs, rhs_df, rhs, broadcast_rhs, by), by,
+        error_threshold,
     )
     return verdict.select(
         *by,
@@ -84,27 +108,9 @@ def ind_metrics_df(
     )
 
 
-def _ind_verdict(lhs_df, lhs, rhs_df, rhs, error_threshold, broadcast_rhs,
-                 by) -> DataFrame:
-    """The fold over distinct LHS values (one cluster each, sized by its
-    row support); violating = missing from the RHS domain."""
-    lhs = as_cols(lhs)
-    rhs = as_cols(rhs)
-    left = (
-        non_null(lhs_df, lhs)
-        .groupBy(*by, *lhs)
-        .agg(F.count(F.lit(1)).alias("ref_count"))
-        .alias("l")
-    )
-    right = non_null(rhs_df, rhs).select(*rhs).distinct().alias("r")
-    if broadcast_rhs:
-        right = F.broadcast(right)
-    cond = [F.col(f"l.{a}") == F.col(f"r.{b}") for a, b in zip(lhs, rhs)]
-    clusters = left.join(right, cond, "left").select(
-        *[F.col(f"l.{c}").alias(c) for c in by],
-        F.col("l.ref_count").alias("ref_count"),
-        F.col(f"r.{rhs[0]}").isNull().alias("missing"),
-    )
+def _ind_fold(clusters: DataFrame, by, error_threshold: float) -> DataFrame:
+    """The verdict over ``_ind_clusters``: one cluster per distinct LHS
+    value; violating = missing from the RHS domain."""
     return verdict_fold(
         clusters, by, "ref_count", F.col("missing"), "clusters",
         error_threshold,
@@ -176,17 +182,20 @@ def ind_verify(
     ``error`` = missing distinct-value fraction (Spider AIND measure);
     ``num_violating_clusters`` = # missing distinct values,
     ``num_violating_rows`` = # LHS rows referencing a missing value,
-    ``total_rows`` = # distinct non-null LHS values.
+    ``total_rows`` = # distinct non-null LHS values. ``violations`` are the
+    ``ind_missing_values`` rows of the missing values the verdict
+    checkpointed.
     """
     lhs = as_cols(lhs)
     rhs = as_cols(rhs)
-    m = _ind_verdict(
-        lhs_df, lhs, rhs_df, rhs, error_threshold, broadcast_rhs, []
-    ).collect()[0]
+    m, clusters = checkpointed_verdict(
+        _ind_clusters(lhs_df, lhs, rhs_df, rhs, broadcast_rhs),
+        "ref_count", F.col("missing"), "clusters", error_threshold,
+    )
     return INDResult.from_verdict(
         m,
         total_rows=int(m["num_clusters"]),
-        violations=ind_missing_values(lhs_df, lhs, rhs_df, rhs, broadcast_rhs),
+        violations=_missing(clusters, lhs),
         lhs=tuple(lhs),
         rhs=tuple(rhs),
         details={"error_threshold": error_threshold},

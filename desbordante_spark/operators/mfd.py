@@ -40,7 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from desbordante_spark.model import as_cols, MFDResult, verdict_fold
+from desbordante_spark.model import as_cols, checkpointed_verdict, MFDResult
 
 __all__ = ["mfd_cluster_diameters", "mfd_highlights", "mfd_verify"]
 
@@ -355,17 +355,19 @@ def mfd_verify(
 ) -> MFDResult:
     """Full MFD verdict (mfd_holds + highlights,
     bind_mfd_verification.cpp:21-27). ``error`` = fraction of clusters whose
-    diameter exceeds ``parameter``; violations = those clusters."""
+    diameter exceeds ``parameter``; violations = those clusters, read from
+    the checkpoint the verdict job wrote."""
     lhs = as_cols(lhs)
     rhs = as_cols(rhs)
     diam = mfd_cluster_diameters(
         df, lhs, rhs, metric, q, dist_from_null_is_infinity
     )
-    viol = F.col("diameter") > parameter
-    m = verdict_fold(diam, [], "cluster_size", viol, "clusters").collect()[0]
+    m, violating = checkpointed_verdict(
+        diam, "cluster_size", F.col("diameter") > parameter, "clusters"
+    )
     return MFDResult.from_verdict(
         m,
-        violations=diam.filter(viol),
+        violations=violating,
         lhs=tuple(lhs),
         rhs=tuple(rhs),
         metric=metric,

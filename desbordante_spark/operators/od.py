@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from desbordante_spark.model import (
-    as_cols, non_null, VerificationResult, verdict_fold,
+    as_cols, checkpointed_verdict, non_null, VerificationResult,
 )
 from desbordante_spark.sources.readers import spread_small_input_by
 
@@ -94,6 +94,11 @@ def od_violations(
     order position). ``lhs``/``rhs`` accept a column name or a column list
     (list-based OD, order/order.h:17-47)."""
     g, keys, viol = _od_groups(df, lhs, rhs, context, descending)
+    return _swap_groups(g, keys, viol)
+
+
+def _swap_groups(g: DataFrame, keys: list[str], viol) -> DataFrame:
+    """The ``od_violations`` rows of the windowed groups."""
     return g.filter(viol).select(
         *keys, "group_size", "min_rhs",
         F.col("prev_extreme").alias("prev_max_rhs"),
@@ -109,13 +114,15 @@ def od_verify(
 ) -> VerificationResult:
     """OD verdict: holds iff no swap; error = violating-group fraction.
     Single action — total/violating group counts come from ONE aggregate
-    over the windowed frame (no separate distinct().count() job)."""
-    g, _, viol = _od_groups(df, lhs, rhs, context, descending)
-    m = verdict_fold(g, [], "group_size", viol, "clusters").collect()[0]
+    over the windowed frame (no separate distinct().count() job), and
+    ``violations`` are the ``od_violations`` rows of the violating groups
+    that action checkpointed."""
+    g, keys, viol = _od_groups(df, lhs, rhs, context, descending)
+    m, g = checkpointed_verdict(g, "group_size", viol, "clusters")
     return VerificationResult.from_verdict(
         m,
         total_rows=int(m["num_clusters"]),
-        violations=od_violations(df, lhs, rhs, context, descending),
+        violations=_swap_groups(g, keys, viol),
         details={"lhs": tuple(as_cols(lhs)), "rhs": tuple(as_cols(rhs)),
                  "context": tuple(context), "descending": descending},
     )

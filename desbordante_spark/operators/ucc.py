@@ -18,8 +18,9 @@ single hash aggregation ``groupBy(X).count()`` — Catalyst performs map-side
 partial aggregation, so even a 10^12-row scan sends at most one partial row
 per (partition, key) into the shuffle; a hot duplicate key therefore cannot
 skew the exchange. All verdict metrics come from ONE two-level aggregation
-job (no driver-side iteration). Evidence row-id lists are a separate lazy
-plan, capped per cluster via a window `row_number` so a pathological
+job (no driver-side iteration). ``ucc_verify`` reads its evidence from the
+duplicate keys that job checkpointed (``model.checkpointed_verdict``); row-id
+lists are capped per cluster via a window `row_number` so a pathological
 billion-row cluster never materializes on one task beyond the cap.
 """
 
@@ -31,7 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from desbordante_spark.model import (
-    as_cols, capped_row_ids, non_null, UCCResult, VERDICT_COLS, verdict_fold,
+    as_cols, capped_row_ids, checkpointed_verdict, non_null, UCCResult,
+    VERDICT_COLS, verdict_fold,
 )
 from desbordante_spark.sources.readers import spread_small_input_by
 
@@ -127,18 +129,21 @@ def ucc_verify(
 
     Mirrors UCCVerifier getters (bind_ucc_verification.cpp:20-24): holds,
     #violating clusters, #violating rows, AUCC error; plus the violating
-    clusters as a lazy DataFrame (row-id lists if ``row_id`` given).
+    clusters as a DataFrame over the duplicate keys the verdict checkpointed
+    (row-id lists if ``row_id`` given).
     ``error_threshold > 0`` turns this into AUCC verification: holds iff
     ``error <= threshold``.
     """
     columns = as_cols(columns)
-    m = ucc_metrics_df(df, columns, is_null_equal_null, error_threshold).collect()[0]
+    m, evidence = checkpointed_verdict(
+        _key_counts(df, columns, is_null_equal_null), "cnt",
+        F.col("cnt") > 1, "pairs", error_threshold,
+    )
     if row_id is not None:
-        evidence = ucc_violating_clusters(
-            df, columns, row_id, is_null_equal_null, evidence_cap
+        evidence = capped_row_ids(
+            df, evidence.withColumnRenamed("cnt", "cluster_size"), columns,
+            row_id, is_null_equal_null, evidence_cap,
         )
-    else:
-        evidence = ucc_violations(df, columns, is_null_equal_null)
     return UCCResult.from_verdict(
         m,
         violations=evidence,

@@ -101,20 +101,20 @@ class SuiteRunner:
         return f"{self.checkpoint_dir}/metrics"
 
     def read_metrics(self) -> DataFrame:
-        # Empty-frame fallback ONLY for the path-missing case (first run).
+        # Empty-frame fallback ONLY for the path-missing case (first run),
+        # asked of the session's Hadoop FileSystem for the path's scheme
+        # (a failed read would log a stack trace on every first run).
         # Anything else — corrupt parquet, permission errors — must fail
         # loudly: silently restarting the whole suite on a damaged
         # checkpoint would masquerade as "resume worked".
-        from pyspark.errors import AnalysisException
-
-        try:
-            return self.spark.read.schema(_METRICS_SCHEMA).parquet(
-                self._metrics_path()
-            )
-        except AnalysisException as e:
-            if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-                return self._frame([])
-            raise
+        jvm = self.spark._jvm
+        path = jvm.org.apache.hadoop.fs.Path(self._metrics_path())
+        conf = self.spark._jsparkSession.sessionState().newHadoopConf()
+        if not path.getFileSystem(conf).exists(path):
+            return self._frame([])
+        return self.spark.read.schema(_METRICS_SCHEMA).parquet(
+            self._metrics_path()
+        )
 
     def _frame(self, rows: list[dict]) -> DataFrame:
         return self.spark.createDataFrame(

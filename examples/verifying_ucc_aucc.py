@@ -4,7 +4,7 @@ approximate variant with an error threshold."""
 
 from __future__ import annotations
 
-from desbordante_spark.operators.ucc import ucc_verify, ucc_violations
+from desbordante_spark.operators.ucc import ucc_verify
 
 
 def main(spark, sf_dir: str = "/root/testdata/sf0.001") -> None:
@@ -16,7 +16,7 @@ def main(spark, sf_dir: str = "/root/testdata/sf0.001") -> None:
     res2 = ucc_verify(orders, ["o_custkey"])
     print(f"UCC (o_custkey) holds: {res2.holds}, error={res2.error:.6f}")
     if not res2.holds:
-        for r in ucc_violations(orders, ["o_custkey"]).limit(3).collect():
+        for r in res2.violations.limit(3).collect():
             print(f"  duplicate cluster o_custkey={r['o_custkey']} "
                   f"x{r['cnt']}")
         aucc = ucc_verify(orders, ["o_custkey"], error_threshold=res2.error)

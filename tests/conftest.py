@@ -16,6 +16,9 @@ import os
 import pytest
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
+# the library's default driver heap (16g) lets the one JVM that serves the
+# whole suite grow to all of a small machine's memory before it collects
+os.environ.setdefault("SPARK_DRIVER_MEM", "4g")
 
 
 @pytest.fixture(scope="session")

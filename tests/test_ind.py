@@ -5,7 +5,9 @@ from __future__ import annotations
 
 import pytest
 
-from desbordante_spark.operators.ind import ind_metrics_df, ind_verify
+from desbordante_spark.operators.ind import (
+    ind_metrics_df, ind_missing_values, ind_verify,
+)
 
 
 @pytest.fixture(scope="module")
@@ -44,6 +46,22 @@ def test_ind_holds(tables):
     ok = lhs_df.filter("ref in ('a','b','c')")
     res = ind_verify(ok, ["ref"], rhs_df, ["key"])
     assert res.holds and res.error == 0.0
+
+
+def test_ind_self_derived_rhs_swapped_columns(spark):
+    """An RHS derived from the LHS frame, its columns swapped: the join is
+    resolved through aliases, so both sides stay unambiguous."""
+    df = spark.createDataFrame(
+        [(1, 2), (2, 1), (3, 3), (1, 1), (4, 5)], "a int, b int"
+    )
+    rhs = df.filter("a <= 2")
+    # RHS (b, a) domain: (2,1), (1,2), (1,1); LHS (3,3) and (4,5) miss it
+    want = [(3, 3, 1), (4, 5, 1)]
+    got = ind_missing_values(df, ["a", "b"], rhs, ["b", "a"])
+    assert sorted(map(tuple, got.collect())) == want
+    res = ind_verify(df, ["a", "b"], rhs, ["b", "a"])
+    assert (res.total_rows, res.num_violating_clusters) == (5, 2)
+    assert sorted(map(tuple, res.violations.collect())) == want
 
 
 def test_ind_metrics_df_schema(tables):

@@ -322,3 +322,54 @@ def test_verify_scalars_equal_frame_rollups(spark, rows, n_docs, seed, every):
     assert sum(r["num_violating_rows"] for r in per_part) == (
         res.num_violating_rows
     )
+
+
+def _rows_by_repr(df):
+    """Sorted rows of ``df``; keys may be NULL, so order by ``repr``."""
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+@settings(max_examples=8, deadline=None,
+          suppress_health_check=list(HealthCheck))
+@given(rows=frames_strategy, thr=st.sampled_from([0.0, 0.2]))
+def test_verify_evidence_equals_public_violations(spark, rows, thr):
+    """Each verify's ``violations`` (a filter of the per-cluster frame its
+    verdict checkpointed) has exactly the rows of the public evidence
+    function over the input, including overlapping column lists (OD
+    context = LHS, IND over one column name on both sides, FD with the LHS
+    inside the RHS) and UCC with and without row-id lists."""
+    from desbordante_spark.operators.fd import fd_verify, fd_violations
+    from desbordante_spark.operators.ind import ind_missing_values, ind_verify
+    from desbordante_spark.operators.mfd import (
+        mfd_cluster_diameters, mfd_verify,
+    )
+    from desbordante_spark.operators.od import od_verify, od_violations
+    from desbordante_spark.operators.ucc import (
+        ucc_verify, ucc_violating_clusters, ucc_violations,
+    )
+
+    df = spark.createDataFrame(
+        [(i, *r) for i, r in enumerate(rows)], "id long, " + FRAME_SCHEMA
+    )
+    rhs_df = df.filter("k2 = 0")
+    pairs = [
+        (ucc_verify(df, ["k1", "k2"], error_threshold=thr),
+         ucc_violations(df, ["k1", "k2"])),
+        (ucc_verify(df, ["k1", "v"], is_null_equal_null=False, row_id="id",
+                    evidence_cap=2),
+         ucc_violating_clusters(df, ["k1", "v"], "id", False, 2)),
+        (fd_verify(df, ["k1"], ["v"], thr), fd_violations(df, ["k1"], ["v"])),
+        (fd_verify(df, ["k1"], ["k1", "k2"]),
+         fd_violations(df, ["k1"], ["k1", "k2"])),
+        (ind_verify(df, ["k1"], rhs_df, ["k1"], thr),
+         ind_missing_values(df, ["k1"], rhs_df, ["k1"])),
+        (mfd_verify(df, ["k1"], ["k2"], 1.0),
+         mfd_cluster_diameters(df, ["k1"], ["k2"]).filter("diameter > 1.0")),
+        (od_verify(df, "k1", "k2", ["part"]),
+         od_violations(df, "k1", "k2", ["part"])),
+        (od_verify(df, "k1", "k2", ["k1"], descending=True),
+         od_violations(df, "k1", "k2", ["k1"], descending=True)),
+    ]
+    for res, public in pairs:
+        assert res.violations.columns == public.columns
+        assert _rows_by_repr(res.violations) == _rows_by_repr(public)

@@ -229,10 +229,11 @@ def test_suite_rows_same_with_arrow_off(spark, env):
 def test_run_job_count(spark, tmp_path):
     """A resumed run plus the caller's collect of its frame launches one
     checkpoint scan, each constraint's own jobs and one append per
-    constraint — 15 jobs here. Before the resume set moved to the driver it
+    constraint — 11 jobs here. Before the resume set moved to the driver it
     took 23: a probe job per constraint, the anti-joins, and a union
-    collect that re-ran every appended list frame. A seed no other test
-    uses keeps drift's cached sketch from being reused."""
+    collect that re-ran every appended list frame; 15 while drift cached
+    its sketch and ran its math through exchanges instead of collecting it
+    into a single-partition driver-local frame."""
     docs = generate_documents(spark, 200, seed=4242, dup_pairs=1, n_media=50)
     suite = [_suite()[0], _suite()[3]]
     ckpt = str(tmp_path / "ckpt")
@@ -246,4 +247,40 @@ def test_run_job_count(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(out) == 16
-    assert len(sc.statusTracker().getJobIdsForGroup("runner-jobs")) == 15
+    assert len(sc.statusTracker().getJobIdsForGroup("runner-jobs")) == 11
+
+
+def test_read_metrics_first_run_and_corrupt_checkpoint(spark, tmp_path):
+    """A first run (no checkpoint yet) reads the empty typed frame; a
+    checkpoint that exists but cannot be read still fails loudly."""
+    from desbordante_spark.plans.runner import _METRICS_SCHEMA
+
+    fresh = SuiteRunner(spark, str(tmp_path / "fresh"), "snap-1")
+    m = fresh.read_metrics()
+    assert m.schema == _METRICS_SCHEMA
+    assert m.collect() == []
+    bad = tmp_path / "bad" / "metrics"
+    bad.mkdir(parents=True)
+    (bad / "part-00000.parquet").write_bytes(b"not a parquet file")
+    runner = SuiteRunner(spark, str(tmp_path / "bad"), "snap-1")
+    with pytest.raises(Exception, match="parquet"):
+        runner.read_metrics().collect()
+
+
+def test_drift_leaves_no_cache_entry(spark):
+    """Both drift operators read their sketch once without leaving a
+    cache-manager entry that a later matching plan would reuse."""
+    from desbordante_spark.operators.drift import (
+        drift_metrics, histogram_sketch, quantile_drift,
+    )
+
+    df = spark.createDataFrame(
+        [(f"p{i % 3}", float(i % 17)) for i in range(90)],
+        "part string, v double",
+    )
+    spark.catalog.clearCache()
+    dm = drift_metrics(histogram_sketch(df, "v", "part", bucket_width=4.0))
+    qd = quantile_drift(df, "v", "part", baseline_partition="p0")
+    assert sorted(r["partition"] for r in dm.collect()) == ["p0", "p1", "p2"]
+    assert sorted(r["partition"] for r in qd.collect()) == ["p1", "p2"]
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

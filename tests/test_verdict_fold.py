@@ -42,9 +42,12 @@ def _jobs(spark, group, fn):
 
 
 def test_verify_job_counts(spark, single_file):
-    """Each verify launches exactly the jobs it did before its verdict went
-    through the shared fold: the fold is a plan builder and adds no
-    action. The violations frames stay lazy and launch nothing."""
+    """Each verify launches one job per query stage of its per-cluster
+    frame: the verdict is observed while that frame's violating clusters
+    are checkpointed, so no exchange into a global aggregate follows (the
+    hand-written rollups the fold replaced took one job more: 3/4/5/3/3).
+    Span verify still collects the fold. The fold itself is a plan builder
+    and adds no action."""
     df = single_file
     docs = generate_documents(spark, 200, dup_pairs=1, n_media=50)
     calls = {
@@ -56,13 +59,52 @@ def test_verify_job_counts(spark, single_file):
         "span": lambda: span_invariant_verify(docs),
     }
     got = {k: _jobs(spark, f"fold-jobs-{k}", fn) for k, fn in calls.items()}
-    # the counts of the hand-written rollups the fold replaced (AQE runs
-    # one job per query stage)
-    assert got == {"ucc": 3, "fd": 4, "ind": 5, "mfd": 3, "od": 3, "span": 2}
+    assert got == {"ucc": 2, "fd": 3, "ind": 4, "mfd": 2, "od": 2, "span": 2}
     fold = lambda: verdict_fold(  # noqa: E731
         df, ["part"], "a", F.col("b") > 0, "pairs"
     )
     assert _jobs(spark, "fold-jobs-plan-only", fold) == 0
+
+
+def test_verify_with_evidence_job_counts(spark, single_file):
+    """A verify plus its capped evidence runs the per-cluster aggregation
+    once: ``violations`` reads the violating clusters the verdict
+    checkpointed, so touching it adds only the evidence's own jobs instead
+    of re-running the scan, exchange, aggregation and window (6/7/7/8/5/6 jobs when the
+    evidence was a second plan)."""
+    df = single_file
+    calls = {
+        "ucc": lambda: ucc_verify(df, ["a", "b"]),
+        "ucc_row_id": lambda: ucc_verify(df, ["a"], row_id="id"),
+        "fd": lambda: fd_verify(df, ["a"], ["b"]),
+        "ind": lambda: ind_verify(df, ["a"], df.filter("b = 0"), ["a"]),
+        "mfd": lambda: mfd_verify(df, ["a"], ["x"], 3.0),
+        "od": lambda: od_verify(df, "id", "x", ["a"]),
+    }
+    got = {
+        k: _jobs(spark, f"fold-evidence-{k}",
+                 lambda fn=fn: fn().violations.limit(100).collect())
+        for k, fn in calls.items()
+    }
+    assert got == {"ucc": 4, "ucc_row_id": 5, "fd": 4, "ind": 5, "mfd": 3,
+                   "od": 4}
+
+
+def test_verify_leaves_no_cache_entry(spark, single_file):
+    """The checkpointed per-cluster frame is not a cache-manager entry:
+    no later plan can match it, and nothing is left to unpersist."""
+    df = single_file
+    spark.catalog.clearCache()
+    for res in (
+        ucc_verify(df, ["a", "b"]),
+        ucc_verify(df, ["a"], row_id="id"),
+        fd_verify(df, ["a"], ["b"], 0.5),
+        ind_verify(df, ["a"], df.filter("b = 0"), ["a"]),
+        mfd_verify(df, ["a"], ["x"], 3.0),
+        od_verify(df, "id", "x", ["a"]),
+    ):
+        res.violations.collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def _duplicated_projections(plan: str) -> list[str]:
