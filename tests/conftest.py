@@ -29,6 +29,23 @@ def spark():
     yield s
 
 
+# The reference checkout whose test_input_data/ and examples/datasets/ the
+# golden tests read. Those files are not part of this repository.
+REFERENCE_ROOT = "/root/reference"
+
+
+def reference_path(rel: str) -> str:
+    """Absolute path of ``rel`` inside the reference checkout.
+
+    Skips the calling test, naming the path, when that file or directory
+    is absent; call it for every reference file a test reads.
+    """
+    path = os.path.join(REFERENCE_ROOT, rel)
+    if not os.path.exists(path):
+        pytest.skip(f"reference file absent: {path}")
+    return path
+
+
 # TestFD.csv rows, verbatim (test_input_data/TestFD.csv)
 TESTFD_ROWS = [
     ("1", "1", "1", "1.233", "-", "1"),

@@ -13,6 +13,7 @@ bottom.
 """
 
 import pytest
+from conftest import reference_path
 
 from desbordante_spark.discovery.ac_algorithm import (
     ACFaithful,
@@ -20,16 +21,17 @@ from desbordante_spark.discovery.ac_algorithm import (
     load_reference_csv,
 )
 
-DATA = "/root/reference/test_input_data"
-IRIS = "/root/reference/examples/datasets/iris.csv"
+DATA = "test_input_data"
+IRIS = "examples/datasets/iris.csv"
 
 
 def _iris():
-    return load_reference_csv(IRIS, has_header=False)
+    return load_reference_csv(reference_path(IRIS), has_header=False)
 
 
 def _tbl(name):
-    return load_reference_csv(f"{DATA}/{name}.csv", has_header=True)
+    return load_reference_csv(reference_path(f"{DATA}/{name}.csv"),
+                              has_header=True)
 
 
 def _flat(ranges):

@@ -13,8 +13,10 @@ single row, many passes)."""
 from __future__ import annotations
 
 import csv
+import os
 
 import pytest
+from conftest import REFERENCE_ROOT, TESTFD_COLS, TESTFD_ROWS, reference_path
 
 from desbordante_spark.discovery.aid_search import (
     K_PRIME,
@@ -22,7 +24,7 @@ from desbordante_spark.discovery.aid_search import (
     discover_fds_aid_faithful,
 )
 
-REF = "/root/reference/test_input_data"
+REF = "test_input_data"
 
 
 # ---------------------------------------------------------------- oracle
@@ -95,7 +97,7 @@ def _spark_df(spark, rows, cols):
     )
 
 
-def _csv_rows(path):
+def _read_csv(path):
     with open(path, newline="") as f:
         rdr = csv.reader(f)
         header = next(rdr)
@@ -105,6 +107,21 @@ def _csv_rows(path):
                 break           # (aid.cpp:31-34)
             rows.append(tuple(r))
         return rows, header
+
+
+def _csv_rows(name):
+    """Rows and header of reference fixture ``name``. TestFD.csv, whose
+    rows conftest holds verbatim, is read from the reference where present
+    (and must equal that copy), else taken from the copy."""
+    if name != "TestFD.csv":
+        return _read_csv(reference_path(f"{REF}/{name}"))
+    committed = (list(TESTFD_ROWS), list(TESTFD_COLS))
+    path = os.path.join(REFERENCE_ROOT, REF, name)
+    if not os.path.exists(path):
+        return committed
+    got = _read_csv(path)
+    assert got == committed, f"{path} differs from tests/conftest.py"
+    return got
 
 
 def _assert_matches_oracle(spark, rows, cols, block=16):
@@ -122,7 +139,7 @@ def _assert_matches_oracle(spark, rows, cols, block=16):
 @pytest.mark.parametrize("fixture", ["TestWide.csv", "TestLong.csv",
                                      "TestFD.csv", "Test1.csv"])
 def test_aid_matches_oracle_on_reference_fixtures(spark, fixture):
-    rows, cols = _csv_rows(f"{REF}/{fixture}")
+    rows, cols = _csv_rows(fixture)
     _assert_matches_oracle(spark, rows, cols)
 
 
@@ -157,10 +174,10 @@ def test_compat_aid_routes_to_faithful(spark):
     the in-memory replay of aid.cpp on the same file."""
     import desbordante_spark.compat as desbordante
 
-    rows, cols = _csv_rows(f"{REF}/TestWide.csv")
+    rows, cols = _csv_rows("TestWide.csv")
     want, _, _ = _aid_oracle(rows, cols)
     algo = desbordante.fd.algorithms.Aid()
-    algo.load_data(table=(f"{REF}/TestWide.csv", ",", True))
+    algo.load_data(table=(reference_path(f"{REF}/TestWide.csv"), ",", True))
     algo.execute()
     got = {(tuple(f.lhs), f.rhs) for f in algo.get_fds()}
     assert got == want

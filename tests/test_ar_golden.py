@@ -6,6 +6,7 @@ consequents Spark FPGrowth alone cannot emit."""
 from __future__ import annotations
 
 import pytest
+from conftest import reference_path
 
 from desbordante_spark.operators.ar import (
     frequent_itemsets,
@@ -13,7 +14,7 @@ from desbordante_spark.operators.ar import (
     transactions_from,
 )
 
-_CSV = "/root/reference/test_input_data/transactional_data/rules-book.csv"
+_CSV = "test_input_data/transactional_data/rules-book.csv"
 
 EXPECTED_FREQUENT = {
     frozenset(s) for s in [
@@ -38,7 +39,7 @@ EXPECTED_RULES = {
 
 @pytest.fixture(scope="module")
 def book_tx(spark):
-    df = spark.read.csv(_CSV).toDF("tid", "item")
+    df = spark.read.csv(reference_path(_CSV)).toDF("tid", "item")
     return transactions_from(df, "singular", tid_col="tid",
                              item_col="item").cache()
 

@@ -6,10 +6,11 @@ the reference's string order is an internal artifact)."""
 from __future__ import annotations
 
 import pytest
+from conftest import reference_path
 
 from desbordante_spark.discovery.cfd_miner import discover_cfds
 
-_CFD = "/root/reference/test_input_data/cfd_data"
+_CFD = "test_input_data/cfd_data"
 
 TENNIS_EXPECTED = [
     "(windy, temp, outlook) => humidity",
@@ -68,7 +69,7 @@ def _parse_ours(row):
 
 def _mine(spark, path, minsup, minconf, max_lhs, ncols=None, nrows=None):
     df = (
-        spark.read.option("header", "true").csv(path)
+        spark.read.option("header", "true").csv(reference_path(path))
     )
     if ncols is not None:
         df = df.select(df.columns[:ncols])

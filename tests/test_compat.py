@@ -5,8 +5,13 @@ and the README's documented golden output."""
 from __future__ import annotations
 
 import pytest
+from conftest import reference_path
 
-DS = "/root/reference/examples/datasets"
+DS = "examples/datasets"
+
+
+def _ds(name):
+    return reference_path(f"{DS}/{name}")
 
 
 @pytest.fixture(autouse=True)
@@ -27,7 +32,7 @@ def test_compat_fd_mining_readme_golden():
     import desbordante_spark.compat as desbordante
 
     algo = desbordante.fd.algorithms.Default()
-    algo.load_data(table=(f"{DS}/university_fd.csv", ",", True))
+    algo.load_data(table=(_ds("university_fd.csv"), ",", True))
     algo.execute()
     got = {_norm(str(f)) for f in algo.get_fds()}
     want = {
@@ -47,7 +52,7 @@ def test_compat_fd_mining_readme_golden():
                 desbordante.fd.algorithms.FUN,
                 desbordante.fd.algorithms.FDep):
         a = cls()
-        a.load_data(table=(f"{DS}/university_fd.csv", ",", True))
+        a.load_data(table=(_ds("university_fd.csv"), ",", True))
         a.execute()
         assert {_norm(str(f)) for f in a.get_fds()} == want, cls
 
@@ -57,7 +62,7 @@ def test_compat_ucc_verification():
     import desbordante_spark.compat as desbordante
 
     v = desbordante.ucc_verification.algorithms.Default()
-    v.load_data(table=(f"{DS}/actors_and_actress.csv", ",", True))
+    v.load_data(table=(_ds("actors_and_actress.csv"), ",", True))
     v.execute(ucc_indices=[1])
     assert not v.ucc_holds()
     assert v.get_num_clusters_violating_ucc() >= 1
@@ -68,7 +73,7 @@ def test_compat_ucc_verification():
     assert all(c == sorted(c) for c in clusters)
     # Person ID (index 0) IS unique
     u = desbordante.ucc_verification.algorithms.Default()
-    u.load_data(table=(f"{DS}/actors_and_actress.csv", ",", True))
+    u.load_data(table=(_ds("actors_and_actress.csv"), ",", True))
     u.execute(ucc_indices=[0])
     assert u.ucc_holds()
 
@@ -77,7 +82,7 @@ def test_compat_fd_afd_verification():
     import desbordante_spark.compat as desbordante
 
     fv = desbordante.afd_verification.algorithms.Default()
-    fv.load_data(table=(f"{DS}/university_fd.csv", ",", True))
+    fv.load_data(table=(_ds("university_fd.csv"), ",", True))
     fv.execute(lhs_indices=[0], rhs_indices=[1])  # Course -> Classroom
     assert not fv.fd_holds()
     assert 0 < fv.get_error() < 1
@@ -89,7 +94,7 @@ def test_compat_ar_mining():
     import desbordante_spark.compat as desbordante
 
     ar = desbordante.ar.algorithms.Default()
-    ar.load_data(table=(f"{DS}/rules_book.csv", ",", False))
+    ar.load_data(table=(_ds("rules_book.csv"), ",", False))
     ar.execute(minsup=0.4, minconf=0.6, input_format="singular")
     rules = ar.get_ars()
     assert rules and all(0.6 <= r.confidence <= 1.0 for r in rules)
@@ -100,7 +105,7 @@ def test_compat_mfd_verification():
     import desbordante_spark.compat as desbordante
 
     mv = desbordante.mfd_verification.algorithms.Default()
-    mv.load_data(table=(f"{DS}/theatres_mfd.csv", ",", True))
+    mv.load_data(table=(_ds("theatres_mfd.csv"), ",", True))
     mv.execute(lhs_indices=[0], rhs_indices=[2], parameter=5.0)
     assert isinstance(mv.mfd_holds(), bool)
 
@@ -113,8 +118,8 @@ def test_compat_dd_mining_difference_table():
     import desbordante_spark.compat as desbordante
 
     dd = desbordante.dd.algorithms.Split()
-    dd.load_data(table=(f"{DS}/flights_dd.csv", ",", True))
-    dd.execute(difference_table=(f"{DS}/flights_dd_dif_table.csv", ",", True))
+    dd.load_data(table=(_ds("flights_dd.csv"), ",", True))
+    dd.execute(difference_table=(_ds("flights_dd_dif_table.csv"), ",", True))
     dds = dd.get_dds()
     assert all(d.lo <= d.hi for d in dds)
     rendered = {str(d) for d in dds}
@@ -129,13 +134,13 @@ def test_compat_afd_mining():
     import desbordante_spark.compat as desbordante
 
     afd = desbordante.afd.algorithms.Tane()
-    afd.load_data(table=(f"{DS}/inventory_afd.csv", ",", True))
+    afd.load_data(table=(_ds("inventory_afd.csv"), ",", True))
     afd.execute(error=0.1)
     fds = afd.get_fds()
     assert fds and all(f.error <= 0.1 for f in fds)
     # Pyro (sampled two-phase) returns the same AFD set
     pyro = desbordante.afd.algorithms.Pyro()
-    pyro.load_data(table=(f"{DS}/inventory_afd.csv", ",", True))
+    pyro.load_data(table=(_ds("inventory_afd.csv"), ",", True))
     pyro.execute(error=0.1)
     assert {(f.lhs, f.rhs) for f in pyro.get_fds()} == \
         {(f.lhs, f.rhs) for f in fds}
@@ -147,7 +152,7 @@ def test_compat_afd_readme_golden():
     import desbordante_spark.compat as desbordante
 
     algo = desbordante.afd.algorithms.Default()
-    algo.load_data(table=(f"{DS}/inventory_afd.csv", ",", True))
+    algo.load_data(table=(_ds("inventory_afd.csv"), ",", True))
     algo.execute(error=0.1)
     assert sorted(str(f) for f in algo.get_fds()) == [
         "[Id] -> Price",
@@ -164,7 +169,7 @@ def test_compat_afd_iris_pandas_readme_golden():
     import desbordante_spark.compat as desbordante
 
     pyro = desbordante.afd.algorithms.Pyro()
-    df = pd.read_csv(f"{DS}/iris.csv", sep=",", header=None)
+    df = pd.read_csv(_ds("iris.csv"), sep=",", header=None)
     pyro.load_data(table=df)
 
     def got(error):
@@ -225,7 +230,7 @@ def test_compat_data_stats():
     import desbordante_spark.compat as desbordante
 
     ds = desbordante.statistics.algorithms.Default()
-    ds.load_data(table=(f"{DS}/Workshop.csv", ",", True))
+    ds.load_data(table=(_ds("Workshop.csv"), ",", True))
     ds.execute()
     n = ds.get_number_of_columns()
     assert n >= 3
@@ -253,9 +258,9 @@ def test_compat_ind_mining():
 
     ind = desbordante.ind.algorithms.Default()
     ind.load_data(tables=[
-        (f"{DS}/ind_datasets/course.csv", ",", True),
-        (f"{DS}/ind_datasets/department.csv", ",", True),
-        (f"{DS}/ind_datasets/instructor.csv", ",", True),
+        (_ds("ind_datasets/course.csv"), ",", True),
+        (_ds("ind_datasets/department.csv"), ",", True),
+        (_ds("ind_datasets/instructor.csv"), ",", True),
     ])
     ind.execute()
     inds = ind.get_inds()
@@ -271,7 +276,7 @@ def test_compat_od_mining():
     import desbordante_spark.compat as desbordante
 
     od = desbordante.od.algorithms.Fastod()
-    od.load_data(table=(f"{DS}/salary.csv", ",", True))
+    od.load_data(table=(_ds("salary.csv"), ",", True))
     od.execute()
     # canonical reference forms (1-based indices: 1=year,
     # 2=employee_grade, 3=avg_salary): within each year, higher grade
@@ -286,7 +291,7 @@ def test_compat_cfd_mining():
     import desbordante_spark.compat as desbordante
 
     cfd = desbordante.cfd.algorithms.Default()
-    cfd.load_data(table=(f"{DS}/play_tennis.csv", ",", True))
+    cfd.load_data(table=(_ds("play_tennis.csv"), ",", True))
     cfd.execute(minsup=4, minconf=0.9, max_lhs=2)
     rules = cfd.get_cfds()
     assert rules
@@ -298,7 +303,7 @@ def test_compat_ucc_mining():
     import desbordante_spark.compat as desbordante
 
     u = desbordante.ucc.algorithms.Default()
-    u.load_data(table=(f"{DS}/actors_and_actress.csv", ",", True))
+    u.load_data(table=(_ds("actors_and_actress.csv"), ",", True))
     u.execute(max_lhs=2)
     uccs = u.get_uccs()
     assert any(x.lhs == ("Person ID",) for x in uccs)
@@ -310,16 +315,17 @@ def test_compat_gfd_verification():
     holds via get_gfds() membership)."""
     import desbordante_spark.compat as desbordante
 
-    base = "/root/reference/examples/verifying_gfd/datasets"
+    base = "examples/verifying_gfd/datasets"
+    gfd = reference_path(f"{base}/gfds/correct_author_gfd.dot")
     algo = desbordante.gfd_verification.algorithms.EGfdValid()
-    algo.load_data(gfd=[f"{base}/gfds/correct_author_gfd.dot"],
-                   graph=f"{base}/graphs/blogs_graph.dot")
+    algo.load_data(gfd=[gfd],
+                   graph=reference_path(f"{base}/graphs/blogs_graph.dot"))
     algo.execute()
     assert len(algo.get_gfds()) == 1
 
     bad = desbordante.gfd_verification.algorithms.EGfdValid()
-    bad.load_data(gfd=[f"{base}/gfds/correct_author_gfd.dot"],
-                  graph=f"{base}/graphs/incorrect_author_blogs_graph.dot")
+    bad.load_data(gfd=[gfd], graph=reference_path(
+        f"{base}/graphs/incorrect_author_blogs_graph.dot"))
     bad.execute()
     assert len(bad.get_gfds()) == 0
 
@@ -331,7 +337,7 @@ def test_compat_ac_mining():
 
     import desbordante_spark.compat as desbordante
 
-    df = pd.read_csv(f"{DS}/cargo_march.csv", sep=",", header=0)
+    df = pd.read_csv(_ds("cargo_march.csv"), sep=",", header=0)
     algo = desbordante.ac.algorithms.Default()
     algo.load_data(table=df[["Delivery date", "Dispatch date"]])
     algo.execute(bin_operation="-", weight=0.1, ac_seed=11,
@@ -354,7 +360,7 @@ def test_compat_typo_mining_flow():
 
     import desbordante_spark.compat as desbordante
 
-    df = pd.read_csv(f"{DS}/Workshop.csv", sep=",", header=0)
+    df = pd.read_csv(_ds("Workshop.csv"), sep=",", header=0)
     exact = desbordante.fd.algorithms.Default()
     exact.load_data(table=df)
     exact.execute(max_lhs=2)

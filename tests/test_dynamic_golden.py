@@ -8,13 +8,17 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
+from conftest import reference_path
 
-_DYN = "/root/reference/test_input_data/dynamic_fd"
-_INIT = (f"{_DYN}/TestDynamicInit.csv", ",", True)
+_DYN = "test_input_data/dynamic_fd"
+
+
+def _init():
+    return (reference_path(f"{_DYN}/TestDynamicInit.csv"), ",", True)
 
 
 def _table(name):
-    return pd.read_csv(f"{_DYN}/{name}.csv", dtype=str,
+    return pd.read_csv(reference_path(f"{_DYN}/{name}.csv"), dtype=str,
                        keep_default_na=False)
 
 
@@ -56,7 +60,7 @@ def test_dynamic_fd_init_golden(spark, lhs, rhs, clusters, rows, error):
     import desbordante_spark.compat as desbordante
 
     v = desbordante.dynamic_fd_verification.algorithms.Default()
-    v.load_data(table=_INIT, lhs_indices=lhs, rhs_indices=rhs)
+    v.load_data(table=_init(), lhs_indices=lhs, rhs_indices=rhs)
     assert v.fd_holds() is (clusters == 0)
     assert v.get_num_error_clusters() == clusters
     assert v.get_num_error_rows() == rows
@@ -70,7 +74,7 @@ def test_dynamic_fd_crud_golden(spark, lhs, rhs, clusters, rows, error,
     import desbordante_spark.compat as desbordante
 
     v = desbordante.dynamic_fd_verification.algorithms.Default()
-    v.load_data(table=_INIT, lhs_indices=lhs, rhs_indices=rhs)
+    v.load_data(table=_init(), lhs_indices=lhs, rhs_indices=rhs)
     v.execute(insert=_insert() if ins else None,
               update=_update() if upd else None,
               delete=dele)

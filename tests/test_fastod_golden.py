@@ -26,8 +26,9 @@ import csv
 import os
 
 import pytest
+from conftest import reference_path
 
-DATA = "/root/reference/test_input_data"
+DATA = "test_input_data"
 M64 = (1 << 64) - 1
 
 
@@ -58,7 +59,7 @@ def fastod_result_hash(res: dict) -> int:
 
 
 def load_numeric(spark, rel_path):
-    with open(f"{DATA}/{rel_path}", newline="") as f:
+    with open(reference_path(f"{DATA}/{rel_path}"), newline="") as f:
         rows = list(csv.reader(f))
     hdr, data = rows[0], [r for r in rows[1:] if len(r) == len(rows[0])]
     cols = [f"c{i}" for i in range(len(hdr))]
@@ -97,7 +98,7 @@ STRING_GOLD = [
 
 
 def load_strings(spark, rel_path):
-    with open(f"{DATA}/{rel_path}", newline="") as f:
+    with open(reference_path(f"{DATA}/{rel_path}"), newline="") as f:
         rows = list(csv.reader(f))
     hdr, data = rows[0], rows[1:]
     cols = [f"c{i}" for i in range(len(hdr))]

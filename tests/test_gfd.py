@@ -5,6 +5,7 @@ satisfy the conclusion; a missing attribute falsifies its literal)."""
 from __future__ import annotations
 
 import pytest
+from conftest import reference_path
 
 from desbordante_spark.operators.gfd import (
     gfd_matches,
@@ -148,7 +149,7 @@ def test_gfd_disconnected_pattern_components(spark):
 
 # ---- GfdValidationTest goldens (test_gfd_validation.cpp:32-52) -----------
 
-GRAPH_DATA = "/root/reference/test_input_data/graph_data"
+GRAPH_DATA = "test_input_data/graph_data"
 
 
 def test_gfd_quadrangle_trivially_holds(spark):
@@ -162,15 +163,15 @@ def test_gfd_quadrangle_trivially_holds(spark):
         verify_gfd_files,
     )
 
-    spec = parse_gfd_file(f"{GRAPH_DATA}/quadrangle_gfd.dot")
+    spec = parse_gfd_file(reference_path(f"{GRAPH_DATA}/quadrangle_gfd.dot"))
     assert spec["premises"] == []
     assert spec["conclusion"] == [(("0", "sides"), ("1", "sides"))]
     assert spec["pattern_vertices"] == {"0": "polygon", "1": "triangle"}
 
     res = verify_gfd_files(
         spark,
-        f"{GRAPH_DATA}/quadrangle.dot",
-        f"{GRAPH_DATA}/quadrangle_gfd.dot",
+        reference_path(f"{GRAPH_DATA}/quadrangle.dot"),
+        reference_path(f"{GRAPH_DATA}/quadrangle_gfd.dot"),
     )
     assert res.holds
     assert res.total_rows == 0
@@ -185,7 +186,7 @@ def test_gfd_directors_does_not_hold(spark):
 
     res = verify_gfd_files(
         spark,
-        f"{GRAPH_DATA}/directors.dot",
-        f"{GRAPH_DATA}/directors_gfd.dot",
+        reference_path(f"{GRAPH_DATA}/directors.dot"),
+        reference_path(f"{GRAPH_DATA}/directors_gfd.dot"),
     )
     assert not res.holds

@@ -4,6 +4,7 @@ AIND error = missing distinct LHS fraction (ind/spider/attribute.cpp:10-21)."""
 from __future__ import annotations
 
 import pytest
+from conftest import reference_path
 
 from desbordante_spark.operators.ind import (
     ind_metrics_df, ind_missing_values, ind_verify,
@@ -90,8 +91,8 @@ def _two_tables(spark):
     import csv
 
     def load(name):
-        path = f"/root/reference/test_input_data/ind_data/two_tables/{name}"
-        with open(path, newline="") as f:
+        path = f"test_input_data/ind_data/two_tables/{name}"
+        with open(reference_path(path), newline="") as f:
             rows = [r for r in csv.reader(ln.rstrip() for ln in f)]
         cols = [f"c{i}" for i in range(len(rows[0]))]
         return spark.createDataFrame(

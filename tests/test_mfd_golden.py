@@ -11,10 +11,11 @@ detail Catalyst owns)."""
 from __future__ import annotations
 
 import pytest
+from conftest import reference_path
 
 from desbordante_spark.operators.mfd import mfd_verify
 
-_DATA = "/root/reference/test_input_data"
+_DATA = "test_input_data"
 
 
 @pytest.fixture(scope="module")
@@ -27,7 +28,7 @@ def tables(spark):
             # the reference's typed-column path nulls the NULL literal and
             # empty cells (typed_column_data.h:181-185) before verifying
             .option("nullValue", "NULL")
-            .csv(f"{_DATA}/{name}.csv")
+            .csv(reference_path(f"{_DATA}/{name}.csv"))
             .cache()
         )
     return out

@@ -8,6 +8,7 @@ hand-checked non-dependencies must fail."""
 from __future__ import annotations
 
 import pytest
+from conftest import reference_path
 
 from desbordante_spark.operators.od import od_verify
 
@@ -46,7 +47,7 @@ NEGATIVE = [((0,), (2,)), ((0,), (5,)), ((5,), (0,)), ((4,), (2,))]
 def odnorm6(spark):
     return (
         spark.read.option("header", "true").option("inferSchema", "true")
-        .csv("/root/reference/test_input_data/OD_norm6.csv")
+        .csv(reference_path("test_input_data/OD_norm6.csv"))
         .cache()
     )
 

@@ -28,8 +28,9 @@ from __future__ import annotations
 import csv
 
 import pytest
+from conftest import reference_path
 
-DATA = "/root/reference/test_input_data"
+DATA = "test_input_data"
 M64 = (1 << 64) - 1
 M32 = (1 << 32) - 1
 
@@ -95,7 +96,7 @@ def fds_to_json(fds, pos) -> str:
 def load(spark, name):
     """Reference CSV → string frame, '' kept literal, bad-arity rows
     skipped (the parser's semantics, csv_parser + relation data)."""
-    with open(f"{DATA}/{name}.csv", newline="") as f:
+    with open(reference_path(f"{DATA}/{name}.csv"), newline="") as f:
         rows = list(csv.reader(f))
     hdr, data = rows[0], [r for r in rows[1:] if len(r) == len(rows[0])]
     cols = [f"c{i}" for i in range(len(hdr))]

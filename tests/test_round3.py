@@ -9,6 +9,7 @@ from collections import Counter, defaultdict
 from itertools import combinations
 
 import pytest
+from conftest import reference_path
 
 # ---------------------------------------------------------------- CFD mining
 
@@ -232,14 +233,14 @@ def test_mind_same_table_inds(spark):
 
 # ------------------------------------------------------- .dot graph source
 
-DIRECTORS = "/root/reference/test_input_data/graph_data/directors.dot"
-DIRECTORS_GFD = "/root/reference/test_input_data/graph_data/directors_gfd.dot"
+DIRECTORS = "test_input_data/graph_data/directors.dot"
+DIRECTORS_GFD = "test_input_data/graph_data/directors_gfd.dot"
 
 
 def test_parse_dot_graph():
     from desbordante_spark.sources.graph_dot import parse_dot_graph
 
-    text = open(DIRECTORS).read()
+    text = open(reference_path(DIRECTORS)).read()
     vrows, erows = parse_dot_graph(text)
     assert len(vrows) == 12 and len(erows) == 9
     v0 = next(v for v in vrows if v["vertex_id"] == "0")
@@ -250,7 +251,7 @@ def test_parse_dot_graph():
 def test_parse_gfd_file():
     from desbordante_spark.sources.graph_dot import parse_gfd_file
 
-    spec = parse_gfd_file(DIRECTORS_GFD)
+    spec = parse_gfd_file(reference_path(DIRECTORS_GFD))
     assert spec["premises"] == [(("0", "celebrity"), "high")]
     assert spec["conclusion"] == [(("1", "success"), "high")]
     assert spec["pattern_vertices"] == {"0": "person", "1": "film"}
@@ -260,7 +261,8 @@ def test_parse_gfd_file():
 def test_gfd_dot_end_to_end(spark):
     from desbordante_spark.sources.graph_dot import verify_gfd_files
 
-    res = verify_gfd_files(spark, DIRECTORS, DIRECTORS_GFD)
+    res = verify_gfd_files(spark, reference_path(DIRECTORS),
+                           reference_path(DIRECTORS_GFD))
     # golden: Cameron (celebrity=high) directed Piranha II (success=low)
     assert not res.holds
     assert res.num_violating_rows == 1
@@ -954,13 +956,13 @@ def test_type_profile_reference_goldens(spark):
         "SimpleTypes1.csv": ["int", "string", "double", "mixed", "int",
                              "date", "mixed"],
     }
-    base = "/root/reference/test_input_data"
+    base = "test_input_data"
     for fname, expected in goldens.items():
         df = (
             spark.read.option("header", "true")
             .option("quote", '"')
             .option("escape", '"')   # RFC4180 doubled-quote escaping
-            .csv(f"{base}/{fname}")
+            .csv(reference_path(f"{base}/{fname}"))
         )
         assert len(df.columns) == len(expected), fname
         got = {r["column"]: r["inferred_type"]
