@@ -185,7 +185,7 @@ def main() -> None:
                     "sf": "generated",
                     "docs_per_sec": round(N_BENCH_DOCS / suite_sec, 1),
                     "n_bench_docs": N_BENCH_DOCS,
-                    "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+                    "cpus": spark.sparkContext.defaultParallelism,
                 }
             )
         )

@@ -26,6 +26,18 @@ Checkpoint layout (``checkpoint_dir``):
   partitions. A NULL partition key is never done. The checkpoint append and
   the returned frame are built from the collected rows via one Arrow table.
 
+Concurrency: the constraints' actions run side by side on a thread pool of
+``min(len(constraints), defaultParallelism)`` workers; each worker inherits
+the caller's job group and local properties and describes its jobs with its
+constraint's name. The caller appends each constraint's rows and calls
+``on_progress`` in list order, so the appends of earlier constraints overlap
+the compute of later ones and the checkpoint reads as a sequential run's
+would. ``wall_ms`` is each constraint's own elapsed time, which can overlap
+other constraints'. A constraint with ``shuffle_partitions`` changes the
+session conf every thread shares, so it is a barrier: it runs alone on the
+caller thread. If constraint k raises, the run waits for every constraint in
+flight, keeps the appends of constraints 0..k-1 and re-raises k's exception.
+
 On a real Iceberg deployment ``snapshot_id`` is the table's snapshot id
 (``SELECT snapshot_id()``); here it is caller-provided. The checkpoint is
 plain parquet so it works against any filesystem Spark can write.
@@ -35,10 +47,13 @@ from __future__ import annotations
 
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from itertools import groupby
 from typing import Any, Callable
 
 import pyarrow as pa
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -133,18 +148,6 @@ class SuiteRunner:
             done.setdefault(r["constraint"], set()).add(r["partition"])
         return done
 
-    def completed_partitions(self, constraint: str) -> DataFrame:
-        """Partitions already verified for this (snapshot, constraint)."""
-        return (
-            self.read_metrics()
-            .filter(
-                (F.col("snapshot_id") == self.snapshot_id)
-                & (F.col("constraint") == constraint)
-            )
-            .select(F.col("partition"))
-            .distinct()
-        )
-
     # ------------------------------------------------------------ dispatch
 
     def _metrics_for(self, c: Constraint, df: DataFrame,
@@ -237,6 +240,21 @@ class SuiteRunner:
 
     # ---------------------------------------------------------------- run
 
+    def _collect(self, c: Constraint, work: DataFrame,
+                 aux: dict[str, DataFrame]) -> tuple[list, int, float]:
+        """One constraint's verdict rows, its own elapsed ms and its finish
+        time. Its Spark jobs carry its name as their description; the
+        calling thread's description is restored afterwards."""
+        sc = self.spark.sparkContext
+        before = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(c.name)
+        t0 = time.monotonic()
+        try:
+            rows = self._metrics_for(c, work, aux).collect()
+        finally:
+            sc.setJobDescription(before)
+        return rows, int((time.monotonic() - t0) * 1000), time.time()
+
     def run(
         self,
         df: DataFrame,
@@ -247,34 +265,65 @@ class SuiteRunner:
     ) -> DataFrame:
         """Run the suite; returns this run's metrics rows (also appended to
         the checkpoint). With ``resume=True``, partitions already verified
-        under this snapshot are skipped per constraint."""
+        under this snapshot are skipped per constraint.
+
+        Constraints run concurrently; appends and ``on_progress`` follow
+        the list order. A constraint with ``shuffle_partitions`` runs alone.
+        If one raises, the constraints before it are appended, nothing
+        after it is, and its exception propagates once no job is running.
+        """
         aux = aux or {}
         sc_conf = self.spark.conf
         default_sp = sc_conf.get("spark.sql.shuffle.partitions")
         done = self._done() if resume else {}
         key = F.col(self.partition_col).cast("string")
         all_rows: list[dict] = []
-        for c in constraints:
-            t0 = time.monotonic()
-            skip = done.get(c.name, set())
+
+        def work(c: Constraint) -> DataFrame:
+            skip = done.get(c.name)
             # drift's baseline is the whole input: it drops finished rows instead
-            work = (df if not skip or c.kind == "drift"
-                    else df.filter(key.isNull() | ~key.isin(sorted(skip))))
-            if c.shuffle_partitions:
-                sc_conf.set("spark.sql.shuffle.partitions",
-                            str(c.shuffle_partitions))
-            try:
-                rows = self._metrics_for(c, work, aux).collect()
-            finally:
-                if c.shuffle_partitions:
-                    sc_conf.set("spark.sql.shuffle.partitions", default_sp)
-            wall_ms = int((time.monotonic() - t0) * 1000)
-            now = time.time()
+            if not skip or c.kind == "drift":
+                return df
+            return df.filter(key.isNull() | ~key.isin(sorted(skip)))
+
+        def settle(c: Constraint, result: tuple[list, int, float]) -> None:
+            collected, wall_ms, now = result
+            skip = done.get(c.name, set())
             rows = [{**r.asDict(), "wall_ms": wall_ms, "finished_at": now}
-                    for r in rows if r["partition"] not in skip]
+                    for r in collected if r["partition"] not in skip]
             # the append is the resume marker: one per constraint
             self._frame(rows).write.mode("append").parquet(self._metrics_path())
-            all_rows += rows
+            all_rows.extend(rows)
             if on_progress:
                 on_progress(c.name, len(rows))
+
+        # an override sets the session conf every thread shares, so such a
+        # constraint is a barrier: it runs alone, on this thread
+        for barrier, group in groupby(constraints,
+                                      key=lambda c: bool(c.shuffle_partitions)):
+            group = list(group)
+            if barrier:
+                for c in group:
+                    sc_conf.set("spark.sql.shuffle.partitions",
+                                str(c.shuffle_partitions))
+                    try:
+                        result = self._collect(c, work(c), aux)
+                    finally:
+                        sc_conf.set("spark.sql.shuffle.partitions", default_sp)
+                    settle(c, result)
+                continue
+            pool = ThreadPoolExecutor(
+                min(len(group), self.spark.sparkContext.defaultParallelism))
+            try:
+                # wrapped per constraint: each worker gets its own copy of
+                # this thread's job group and local properties
+                futures = [
+                    pool.submit(inheritable_thread_target(self.spark)(
+                        self._collect), c, work(c), aux)
+                    for c in group
+                ]
+                for c, fut in zip(group, futures):
+                    settle(c, fut.result())
+            finally:
+                pool.shutdown(wait=True, cancel_futures=True)
         return self._frame(all_rows)

@@ -16,8 +16,8 @@ import os
 import pytest
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-# the library's default driver heap (16g) lets the one JVM that serves the
-# whole suite grow to all of a small machine's memory before it collects
+# one JVM serves the whole suite: a fixed heap keeps its footprint the same
+# whatever the library would derive from the machine's memory
 os.environ.setdefault("SPARK_DRIVER_MEM", "4g")
 
 

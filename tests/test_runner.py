@@ -4,6 +4,10 @@ skips completed partitions)."""
 
 from __future__ import annotations
 
+import sys
+import threading
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -93,9 +97,11 @@ def test_resume_skips_completed(spark, env):
     parts2 = sorted(r["partition"] for r in out2.collect())
     assert len(parts2) == 8
     assert all(p >= "p008" for p in parts2)
-    # checkpoint now covers all 16 under snapA
-    done = r2.completed_partitions("doc_id_unique").count()
-    assert done == 16
+    # checkpoint now covers all 16 under snapA, so a third run has nothing
+    # left to verify
+    assert r2._done() == {"doc_id_unique": {f"p{i:03d}" for i in range(16)}}
+    r2b = SuiteRunner(spark, ckpt, snapshot_id="snapA")
+    assert r2b.run(docs, [_suite()[0]], aux={"media_catalog": catalog}).count() == 0
     # a NEW snapshot re-verifies everything
     r3 = SuiteRunner(spark, ckpt, snapshot_id="snapB")
     out3 = r3.run(docs, [_suite()[0]], aux={"media_catalog": catalog})
@@ -144,6 +150,29 @@ def _key(r):
     return tuple(sorted(d.items()))
 
 
+def _rows_custom(check=None):
+    """A ``custom`` constraint's fn: one all-holding row per partition,
+    after ``check()`` ran on the thread that plans it."""
+    def fn(df, by):
+        if check is not None:
+            check()
+        return df.groupBy(*by).agg(
+            F.count(F.lit(1)).alias("total_rows"),
+            F.lit(0).alias("num_violating_rows"),
+            F.lit(0.0).alias("error"),
+            F.lit(1).alias("holds"),
+        )
+    return fn
+
+
+def _no_active_jobs(spark):
+    """No Spark job is running once the listener bus has caught up (the
+    status tracker reads what the bus has delivered so far)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getActiveJobsIds()) == []
+
+
 def test_resume_reverifies_null_partition_keys(spark, env):
     """Rows with a NULL partition key are never counted as done: a resumed
     run re-verifies them, and only them."""
@@ -188,17 +217,8 @@ def test_custom_without_cluster_count_writes_null(spark, env):
     """A custom constraint whose frame has no ``num_violating_clusters``
     gets NULL there, in the checkpoint and in the returned frame alike."""
     docs, catalog, ckpt = env
-
-    def fn(df, by):
-        return df.groupBy(*by).agg(
-            F.count(F.lit(1)).alias("total_rows"),
-            F.lit(0).alias("num_violating_rows"),
-            F.lit(0.0).alias("error"),
-            F.lit(1).alias("holds"),
-        )
-
     runner = SuiteRunner(spark, ckpt, "s")
-    out = runner.run(docs, [Constraint("rows", "custom", {"fn": fn})])
+    out = runner.run(docs, [Constraint("rows", "custom", {"fn": _rows_custom()})])
     rows = out.collect()
     assert len(rows) == 16
     assert all(r["num_violating_clusters"] is None for r in rows)
@@ -284,3 +304,124 @@ def test_drift_leaves_no_cache_entry(spark):
     assert sorted(r["partition"] for r in dm.collect()) == ["p0", "p1", "p2"]
     assert sorted(r["partition"] for r in qd.collect()) == ["p1", "p2"]
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_concurrent_run_matches_one_constraint_runs(spark, env):
+    """One run of the whole suite gives the rows that one run per
+    constraint gives, in the returned frame and in the checkpoint alike;
+    ``on_progress`` and the returned rows follow the list order."""
+    docs, catalog, ckpt = env
+    aux = {"media_catalog": catalog}
+    suite = _suite()
+    names = [c.name for c in suite]
+    seen = []
+    together = SuiteRunner(spark, ckpt + "_all", "s")
+    out = together.run(docs, suite, aux=aux,
+                       on_progress=lambda name, n: seen.append((name, n)))
+    got = out.collect()
+    assert seen == [(n, 16) for n in names]
+    order = [names.index(r["constraint"]) for r in got]
+    assert order == sorted(order)
+
+    one = SuiteRunner(spark, ckpt + "_one", "s")
+    alone = [r for c in suite for r in one.run(docs, [c], aux=aux).collect()]
+    assert len(got) == 64
+    assert sorted(map(_key, got)) == sorted(map(_key, alone))
+    assert sorted(map(_key, together.read_metrics().collect())) == sorted(
+        map(_key, one.read_metrics().collect()))
+
+
+def test_shuffle_partitions_override_runs_alone(spark, env):
+    """A constraint that overrides the shuffle partitions plans with its
+    own value while no other constraint is in flight; the others plan with
+    the session's value, which the run leaves as it found it."""
+    docs, catalog, ckpt = env
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    planned = {}
+
+    def record(name, alone=False):
+        def check():
+            planned[name] = spark.conf.get(key)
+            if alone:
+                assert _no_active_jobs(spark)
+        return check
+
+    suite = [
+        _suite()[0],
+        Constraint("plain", "custom", {"fn": _rows_custom(record("plain"))}),
+        Constraint("three", "custom",
+                   {"fn": _rows_custom(record("three", alone=True))},
+                   shuffle_partitions=3),
+        _suite()[3],
+    ]
+    out = SuiteRunner(spark, ckpt, "s").run(docs, suite)
+    assert planned == {"plain": before, "three": "3"}
+    assert spark.conf.get(key) == before
+    assert out.count() == 64
+
+
+def test_failing_constraint_keeps_earlier_appends(spark, env):
+    """When constraint k raises, the run waits for every constraint still
+    in flight, keeps the appends of the constraints before k, appends
+    nothing after it and re-raises k's own exception."""
+    docs, catalog, ckpt = env
+    boom = RuntimeError("constraint failed")
+    appended, finished = threading.Event(), threading.Event()
+
+    def fail():
+        raise boom
+
+    def slow():
+        # still busy when the caller, done with the first constraint,
+        # meets the failure
+        appended.wait(timeout=30)
+        time.sleep(1.0)
+        finished.set()
+
+    suite = [
+        _suite()[0],
+        Constraint("fails", "custom", {"fn": _rows_custom(fail)}),
+        Constraint("slow", "custom", {"fn": _rows_custom(slow)}),
+        _suite()[1],
+    ]
+    runner = SuiteRunner(spark, ckpt, "s")
+    with pytest.raises(RuntimeError) as err:
+        runner.run(docs, suite, aux={"media_catalog": catalog},
+                   on_progress=lambda name, n: appended.set())
+    assert err.value is boom
+    assert finished.is_set()
+    assert _no_active_jobs(spark)
+    saved = runner.read_metrics().collect()
+    assert {r["constraint"] for r in saved} == {"doc_id_unique"}
+    assert len(saved) == 16
+
+
+def test_job_description_names_each_constraint(spark, env):
+    """Every constraint's jobs carry its name as their description and the
+    caller's job group, also with more constraints than cores and frequent
+    thread switches; the caller's own description is left as it was."""
+    docs, catalog, ckpt = env
+    sc = spark.sparkContext
+
+    def described(name):
+        def check():
+            assert sc.getLocalProperty("spark.job.description") == name
+            assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+        return check
+
+    names = [f"c{i}" for i in range(2 * sc.defaultParallelism + 1)]
+    suite = [Constraint(n, "custom", {"fn": _rows_custom(described(n))})
+             for n in names]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    sc.setJobGroup("caller-group", "caller-group")
+    sc.setJobDescription("caller")
+    try:
+        out = SuiteRunner(spark, ckpt, "s").run(docs, suite)
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sys.setswitchinterval(interval)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert out.count() == 16 * len(names)
