@@ -8,9 +8,10 @@ aggregate machinery as its statistics module (SURVEY.md §2.4 note).
 
 Scale design: the only data-sized job is ONE ``groupBy(partition, bucket)``
 count (map-side partial agg; output is |partitions| × |buckets| rows — tiny).
-Everything downstream (grid completion, CDFs via windows, KS sup-distance,
-chi-square terms) runs on that sketch, collected once into a driver-local
-frame, so the cost is independent of row count. No UDFs, no driver loops.
+``drift_metrics`` collects that sketch once as Arrow and runs everything
+downstream (grid completion, CDFs, KS sup-distance, chi-square terms) on the
+driver, vectorized with numpy over the dense count grid: no second Spark
+plan, no UDFs, no per-row Python, and a cost independent of row count.
 
 Bucketing modes:
 - ``bucket_width`` — fixed-width buckets ``floor(value / width)``; no global
@@ -21,8 +22,12 @@ Bucketing modes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 __all__ = ["histogram_sketch", "drift_metrics", "quantile_drift"]
 
@@ -41,7 +46,7 @@ def _hist_bucket(v: F.Column, spec: float | str) -> F.Column:
 def _on_driver(sketch: DataFrame) -> DataFrame:
     """``sketch`` collected ONCE (as Arrow) and rebuilt as a driver-local,
     single-partition frame: later references never touch the data again,
-    the drift math over it needs no exchange, and unlike ``cache()``
+    ``quantile_drift``'s tail over it needs no exchange, and unlike ``cache()``
     nothing is left registered with the session's cache manager, where a
     later plan that matches would silently reuse it. No exception guard: a
     failure here (executor OOM, bad input plan) must surface, not silently
@@ -86,99 +91,92 @@ def drift_metrics(
     """Per-partition drift verdict from a histogram sketch.
 
     Each partition is compared against the baseline distribution —
-    ``baseline_partition`` if given, else *all other partitions combined*.
-    Output: ``(partition, n_rows, n_baseline, ks_stat, chi2_stat, drifted)``.
+    ``baseline_partition`` if given, else *all other partitions combined*;
+    a NULL partition is a partition like any other. Output: ``(partition,
+    n_rows, n_baseline, ks_stat, chi2_stat, drifted)``, ``partition`` of
+    the sketch's type; a partition without mass gets no row.
 
     Two-sample statistics over shared buckets: KS = sup |CDF_p − CDF_b|
-    (buckets ordered by numeric value when castable, else lexically);
-    chi² = Σ_b (O_pb−E_pb)²/E_pb + (O_bb−E_bb)²/E_bb with expected counts
-    proportional to the pooled bucket mass. All arithmetic is exact integer
-    ratios → engine-independent.
+    (buckets ordered by ``try_cast(bucket as double)``, NULL last, then by
+    the bucket string); chi² = Σ_b (O_pb−E_pb)²/E_pb + (O_bb−E_bb)²/E_bb
+    with expected counts proportional to the pooled bucket mass. A
+    partition whose baseline has no mass gets NULL statistics and
+    ``drifted = 0``; a ``baseline_partition`` no sketch row carries raises
+    ``ValueError``.
+
+    Collected once (order key computed by Spark), then numpy over the
+    dense count grid: no further Spark job, and bit-equal to the SQL
+    formulation (int64 counts, float64 ratios as Spark takes them, chi²
+    summed in bucket order).
     """
-    # the sketch is referenced three times below (bucket domain, per-bucket
-    # totals, the densify join); left lazy, each reference would re-run the
-    # data scan. It is tiny (|partitions| × |buckets| rows), so it is
-    # collected once and the drift math runs on a driver-local frame.
-    counts = _on_driver(sketch)
-    if baseline_partition is not None:
-        base_counts = (
-            counts.filter(F.col("partition") == baseline_partition)
-            .groupBy("bucket")
-            .agg(F.sum("cnt").alias("bcnt"))
-        )
-        part_counts = counts.filter(F.col("partition") != baseline_partition)
-        # grid: every (partition, bucket-with-any-mass) pair
-        grid = (
-            part_counts.select("partition").distinct()
-            .crossJoin(
-                counts.groupBy("bucket").agg(F.sum("cnt").alias("_tb")).select("bucket")
-            )
-        )
-        g = (
-            grid.join(part_counts, ["partition", "bucket"], "left")
-            .join(base_counts, ["bucket"], "left")
-            .select(
-                "partition",
-                "bucket",
-                F.coalesce(F.col("cnt"), F.lit(0)).alias("o1"),
-                F.coalesce(F.col("bcnt"), F.lit(0)).alias("o2"),
-            )
-        )
-    else:
-        tot = counts.groupBy("bucket").agg(F.sum("cnt").alias("tb"))
-        grid = counts.select("partition").distinct().crossJoin(tot)
-        g = (
-            grid.join(counts, ["partition", "bucket"], "left")
-            .select(
-                "partition",
-                "bucket",
-                F.coalesce(F.col("cnt"), F.lit(0)).alias("o1"),
-                (F.col("tb") - F.coalesce(F.col("cnt"), F.lit(0))).alias("o2"),
-            )
+    in_base = F.lit(False) if baseline_partition is None else F.coalesce(
+        F.col("partition") == F.lit(baseline_partition), F.lit(False)
+    )
+    t = sketch.select(
+        "partition",
+        "bucket",
+        F.coalesce(F.col("cnt").cast("long"), F.lit(0)).alias("cnt"),
+        # try_cast, not cast: ANSI mode (on in Spark 4) would raise
+        # CAST_INVALID_INPUT on the non-numeric buckets discrete=True makes
+        F.coalesce(F.col("bucket").try_cast("double"), F.lit(float("inf")))
+        .alias("key"),
+        in_base.alias("in_base"),
+    ).toArrow()
+    parts = t["partition"].combine_chunks().dictionary_encode("encode")
+    buckets = t["bucket"].combine_chunks().dictionary_encode("encode")
+    cnt, base = t["cnt"].to_numpy(), t["in_base"].to_numpy()
+    if baseline_partition is not None and not base.any():
+        raise ValueError(
+            f"baseline_partition {baseline_partition!r} matches no rows of "
+            "the sketch"
         )
 
-    wp = Window.partitionBy("partition")
-    g = g.withColumn("n1", F.sum("o1").over(wp)).withColumn(
-        "n2", F.sum("o2").over(wp)
+    # grid columns in (order key, bucket string) order; a NULL string
+    # sorts first, as in Spark
+    bi = buckets.indices.to_numpy()
+    key = np.empty(len(buckets.dictionary))
+    key[bi] = t["key"].to_numpy()
+    rank = pc.rank(buckets.dictionary, null_placement="at_start").to_numpy()
+    col = np.argsort(np.lexsort((rank, key)))[bi]
+    row = parts.indices.to_numpy()
+    o1 = np.zeros((len(parts.dictionary), len(key)), np.int64)
+    np.add.at(o1, (row, col), cnt)
+    base_part = np.zeros(len(o1), bool)
+    base_part[row[base]] = True
+    if baseline_partition is None:
+        o2 = o1.sum(axis=0) - o1
+    else:
+        o2 = np.broadcast_to(o1[base_part].sum(axis=0), o1.shape)
+    n1, n2 = o1.sum(axis=1), o2.sum(axis=1)
+    keep = (n1 > 0) & ~base_part
+    o1, o2, n1, n2 = o1[keep], o2[keep], n1[keep, None], n2[keep, None]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cdf_diff = np.abs(np.cumsum(o1, axis=1) / n1 - np.cumsum(o2, axis=1) / n2)
+        pooled = (o1 + o2).astype(np.float64)
+        e1 = n1 * pooled / (n1 + n2)
+        e2 = n2 * pooled / (n1 + n2)
+        d1, d2 = o1 - e1, o2 - e2
+        term = np.where(pooled > 0, d1 * d1 / e1 + d2 * d2 / e2, 0.0)
+    # |diff| >= 0, so a 0.0 floor only serves the no-bucket grid; cumsum,
+    # not sum: Spark adds the terms one by one, numpy's sum pairwise
+    ks = cdf_diff.max(axis=1, initial=0.0)
+    chi2 = np.cumsum(term, axis=1)[:, -1:].reshape(-1)
+    no_base = n2[:, 0] == 0
+    out = pa.table({
+        "partition": parts.dictionary.take(np.flatnonzero(keep)),
+        "n_rows": n1[:, 0],
+        "n_baseline": n2[:, 0],
+        "ks_stat": pa.array(ks, mask=no_base),
+        "chi2_stat": pa.array(chi2, mask=no_base),
+        "drifted": ((ks > ks_threshold) & ~no_base).astype(np.int32),
+    })
+    schema = (
+        T.StructType([sketch.schema["partition"]])
+        .add("n_rows", "long").add("n_baseline", "long")
+        .add("ks_stat", "double").add("chi2_stat", "double")
+        .add("drifted", "integer")
     )
-    # order buckets numerically when possible, else lexically — try_cast, not
-    # cast: ANSI mode (on in Spark 4) would raise CAST_INVALID_INPUT on the
-    # non-numeric buckets discrete=True produces (the DuckDB oracle's
-    # TRY_CAST has the same fall-back-to-lexical semantics)
-    order_key = F.coalesce(
-        F.col("bucket").try_cast("double"),
-        F.lit(float("inf")),
-    )
-    wcum = wp.orderBy(order_key, F.col("bucket")).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    g = g.withColumn(
-        "cdf_diff",
-        F.abs(
-            F.sum("o1").over(wcum) / F.col("n1")
-            - F.sum("o2").over(wcum) / F.col("n2")
-        ),
-    )
-    pooled = (F.col("o1") + F.col("o2")).cast("double")
-    e1 = F.col("n1") * pooled / (F.col("n1") + F.col("n2"))
-    e2 = F.col("n2") * pooled / (F.col("n1") + F.col("n2"))
-    d1 = F.col("o1") - e1
-    d2 = F.col("o2") - e2
-    term = F.when(
-        pooled > 0, d1 * d1 / e1 + d2 * d2 / e2
-    ).otherwise(F.lit(0.0))
-    g = g.withColumn("chi2_term", term)
-    return (
-        g.groupBy("partition")
-        .agg(
-            F.max("n1").cast("long").alias("n_rows"),
-            F.max("n2").cast("long").alias("n_baseline"),
-            F.max("cdf_diff").alias("ks_stat"),
-            F.sum("chi2_term").alias("chi2_stat"),
-        )
-        .withColumn("drifted", (F.col("ks_stat") > ks_threshold).cast("int"))
-        .filter(F.col("n_rows") > 0)
-    )
+    return sketch.sparkSession.createDataFrame(out, schema)
 
 
 def quantile_drift(

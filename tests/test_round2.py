@@ -1,12 +1,10 @@
 """Round-2 additions: MFD n-D cluster sizes + highlights, list-based OD,
 CFD pattern tableau, Mind n-ary IND discovery, LSH cap reporting, simhash
-recall-contract warning, ANSI-safe drift bucket ordering."""
+recall-contract warning. The drift tests live in test_drift.py."""
 
 from __future__ import annotations
 
 import pytest
-
-from pyspark.sql import functions as F
 
 
 # ------------------------------------------- MFD n-D cluster_size (fixed)
@@ -291,18 +289,6 @@ def test_fd_highlights_lhs_sort(spark, testfd):
                        sort_by="lhs", ascending=False).collect()
     assert [r["Col1"] for r in hd] == sorted((r["Col1"] for r in hd),
                                              reverse=True)
-
-
-# ------------------------------------------------- drift ANSI bucket order
-
-def test_drift_discrete_string_buckets_ansi(spark):
-    rows = [("p1", "cat"), ("p1", "dog"), ("p2", "cat"), ("p2", "cat")]
-    df = spark.createDataFrame(rows, "part string, animal string")
-    from desbordante_spark.operators.drift import drift_metrics, histogram_sketch
-
-    sk = histogram_sketch(df, "animal", "part", discrete=True)
-    out = drift_metrics(sk, ks_threshold=0.9).collect()  # must not raise
-    assert {r["partition"] for r in out} == {"p1", "p2"}
 
 
 # ------------------------------------------- OD + AFD discovery (round 2)

@@ -905,33 +905,6 @@ def test_central_and_standardized_moments(spark):
         central_moment(one, "v", 2, bessel_correction=True)  # NaN
 
 
-def test_quantile_drift(spark):
-    from desbordante_spark.operators.drift import quantile_drift
-
-    import random
-    rnd = random.Random(7)
-    rows = []
-    for i in range(7):  # 7 clean partitions keep the pooled baseline clean
-        rows += [(f"p{i}", rnd.gauss(0, 1)) for _ in range(2000)]
-    rows += [("p7", rnd.gauss(3, 1)) for _ in range(2000)]  # shifted
-    df = spark.createDataFrame(rows, "part string, v double")
-    got = {r["partition"]: r.asDict()
-           for r in quantile_drift(df, "v", "part",
-                                   rel_threshold=0.2).collect()}
-    assert set(got) == {f"p{i}" for i in range(8)}
-    assert got["p7"]["drifted"] and got["p7"]["max_q_shift"] > 0.3
-    for i in range(7):
-        assert not got[f"p{i}"]["drifted"], got[f"p{i}"]
-    assert got["p0"]["n_rows"] == 2000
-    # explicit baseline partition
-    got2 = {r["partition"]: r.asDict()
-            for r in quantile_drift(df, "v", "part",
-                                    baseline_partition="p0",
-                                    rel_threshold=0.2).collect()}
-    assert set(got2) == {f"p{i}" for i in range(1, 8)}
-    assert got2["p7"]["drifted"] and not got2["p1"]["drifted"]
-
-
 def test_type_profile_reference_goldens(spark):
     """Transplants the reference's type-deduction golden suite
     (src/tests/test_typed_column_data.cpp TypeSystem/TestTypeParsing) for

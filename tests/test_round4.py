@@ -1,7 +1,7 @@
 """Round-4 fixes: ADVICE findings (compat Apriori tabular path, Spider
 basename collision, CFD free-itemset NULL signature + bounded prune-path
-collect, quantile_drift zero-span/missing-baseline) and VERDICT items
-(HyFD sampler heavy-cluster salting, drift cache guard removal)."""
+collect) and VERDICT items (HyFD sampler heavy-cluster salting). The drift
+fixes of that round live in test_drift.py."""
 
 from __future__ import annotations
 
@@ -54,52 +54,6 @@ def test_compat_spider_basename_collision(spark, tmp_path):
     pairs = {(r["lhs"], r["rhs"]) for r in algo.get_inds()}
     tables = {s.split(".")[0] for p in pairs for s in p}
     assert len(tables) == 2
-
-
-# ------------------------------------------------------------- drift fixes
-
-def test_drift_cache_failure_surfaces(spark):
-    """VERDICT item 7 — a failing sketch evaluation must raise at
-    drift_metrics() time, not silently degrade to lazy re-scans."""
-    from desbordante_spark.operators.drift import drift_metrics
-
-    bad = spark.createDataFrame(
-        [("p", "b", "notanumber")],
-        "partition string, bucket string, c string",
-    ).select(
-        "partition", "bucket", F.col("c").cast("long").alias("cnt")
-    )
-    with pytest.raises(Exception):
-        drift_metrics(bad)  # ANSI cast failure surfaces in the eager cache
-
-
-def test_quantile_drift_zero_span_detects_displacement(spark):
-    """ADVICE drift.py:249 — constant baseline: displacement must flag
-    drift instead of dividing into a silent max_q_shift=0."""
-    from desbordante_spark.operators.drift import quantile_drift
-
-    rows = (
-        [("base", 5.0)] * 30 + [("shifted", 7.0)] * 30 + [("same", 5.0)] * 30
-    )
-    df = spark.createDataFrame(rows, "p string, v double")
-    out = {
-        r["partition"]: r
-        for r in quantile_drift(
-            df, "v", "p", baseline_partition="base"
-        ).collect()
-    }
-    assert out["shifted"]["drifted"] is True
-    assert out["shifted"]["max_q_shift"] == float("inf")
-    assert out["same"]["drifted"] is False
-    assert out["same"]["max_q_shift"] == 0.0
-
-
-def test_quantile_drift_missing_baseline_raises(spark):
-    from desbordante_spark.operators.drift import quantile_drift
-
-    df = spark.createDataFrame([("a", 1.0)], "p string, v double")
-    with pytest.raises(ValueError, match="matches no rows"):
-        quantile_drift(df, "v", "p", baseline_partition="nope")
 
 
 # --------------------------------------------------------- CFD miner fixes

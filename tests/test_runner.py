@@ -249,11 +249,13 @@ def test_suite_rows_same_with_arrow_off(spark, env):
 def test_run_job_count(spark, tmp_path):
     """A resumed run plus the caller's collect of its frame launches one
     checkpoint scan, each constraint's own jobs and one append per
-    constraint — 11 jobs here. Before the resume set moved to the driver it
+    constraint — 8 jobs here. Before the resume set moved to the driver it
     took 23: a probe job per constraint, the anti-joins, and a union
     collect that re-ran every appended list frame; 15 while drift cached
     its sketch and ran its math through exchanges instead of collecting it
-    into a single-partition driver-local frame."""
+    into a single-partition driver-local frame; 11 while drift's math ran
+    as a Spark plan (three jobs) over that frame instead of numpy over the
+    collected sketch."""
     docs = generate_documents(spark, 200, seed=4242, dup_pairs=1, n_media=50)
     suite = [_suite()[0], _suite()[3]]
     ckpt = str(tmp_path / "ckpt")
@@ -267,7 +269,7 @@ def test_run_job_count(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(out) == 16
-    assert len(sc.statusTracker().getJobIdsForGroup("runner-jobs")) == 11
+    assert len(sc.statusTracker().getJobIdsForGroup("runner-jobs")) == 8
 
 
 def test_read_metrics_first_run_and_corrupt_checkpoint(spark, tmp_path):
